@@ -170,8 +170,8 @@ object Bench {
       fn().write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    // raw read on purpose: lineitem's schema is stable across rounds
-    // (events' ts precision is not — the Tables adapter exists for it)
+    // raw read on purpose: the canary times the box, so its scan stays
+    // independent of the engine's Tables loaders
     val canaryScanFn = () => spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy().sum("l_quantity")
     val canaryShuffleFn = () => spark.range(0L, 4000000L, 1L, 32)

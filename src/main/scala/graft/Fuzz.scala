@@ -1326,8 +1326,11 @@ object Fuzz {
       (Math.floorMod(us, 1000000L) * 1000L).toInt,
       java.time.ZoneOffset.UTC)
 
-  // writers mirror the driver testdata schemas exactly (events.ts is
-  // TIMESTAMP_NTZ micros — LocalDateTime encodes to precisely that)
+  // writers use the declared types of graft.sources.Tables.schemas,
+  // column by column (a column a draw leaves out reads as NULL). The
+  // timestamps are written as LocalDateTime, i.e. micros without
+  // isAdjustedToUTC — the encoding of the testdata files — and read
+  // back as TIMESTAMP under the declared schema.
   private type EvRow =
     (Long, java.time.LocalDateTime, Long, String, Option[Double], String)
   private def writeEvents(rows: Seq[EvRow])(s: SparkSession, dir: String): Unit = {
@@ -1362,7 +1365,7 @@ object Fuzz {
     sup.toDF("s_suppkey", "s_nationkey").repartition(2)
       .write.mode("overwrite").parquet(s"$dir/supplier.parquet")
   }
-  private def writeSccLineitem(rows: Seq[(Long, Long, Long, Double)])(
+  private def writeSccLineitem(rows: Seq[(Long, Int, Long, Double)])(
       s: SparkSession, dir: String): Unit = {
     import s.implicits._
     rows.toDF("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
@@ -1644,12 +1647,12 @@ object Fuzz {
       val nOrd = 20 + r.nextInt(80)
       val pDupLine = 0.1 + r.nextDouble() * 0.5
       val pOff = r.nextDouble() * 0.3
-      val rows = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double)]()
+      val rows = scala.collection.mutable.ArrayBuffer[(Long, Int, Long, Double)]()
       (1L to nOrd.toLong).foreach { o =>
         val len = 1 + r.nextInt(6)
-        var ln = 0L
+        var ln = 0
         (0 until len).foreach { _ =>
-          if (ln == 0L || r.nextDouble() >= pDupLine) ln += 1L
+          if (ln == 0 || r.nextDouble() >= pDupLine) ln += 1
           val pk =
             if (r.nextDouble() < pOff) 7L * (1 + r.nextInt(nPart)) + 1 + r.nextInt(6)
             else 7L * (1 + r.nextInt(nPart))
@@ -1711,7 +1714,7 @@ object Fuzz {
       // one order per edge: lines (1, 7·u), (2, 7·v) — the (linenumber,
       // partkey) sort then yields exactly edge u→v through sccEdges
       val rows = edges.zipWithIndex.flatMap { case ((u, v), o) =>
-        Seq((o.toLong + 1, 1L, 7L * u, 15.0), (o.toLong + 1, 2L, 7L * v, 15.0))
+        Seq((o.toLong + 1, 1, 7L * u, 15.0), (o.toLong + 1, 2, 7L * v, 15.0))
       }
       DataDraw("ld13b_adversarial",
         s"mode=$mode,perm=$perm,n=$n,edges=${edges.size}",

@@ -178,13 +178,11 @@ object Similarity {
     * identical operands in both engines) — the whole greedy is
     * hash-checkable, mirrored step-for-step by an UNROLLED oracle.
     *
-    * Spelled DECLARATIVELY — k unrolled argmax stages (bounded-heap
-    * top-1 per query + anti-join + a max-sim join against the selected
-    * set), not a per-group imperative loop: every stage is query-keyed
-    * and pool-bounded (`poolSize` ≤ tens), so the whole rerank rides
-    * one hash-partition family after the pool build, and the plan
-    * stays inspectable. The pool build itself is the f1 brute-force
-    * contract; swap in any searcher's candidates at scale. */
+    * The greedy runs as one in-row aggregate over each query's
+    * collected pool (`poolSize` ≤ tens): one shuffle after the pool
+    * build, no per-step barriers. The pool build itself is the f1
+    * brute-force contract; swap in any searcher's candidates at
+    * scale. */
   def mmrTopK(corpus: DataFrame, queries: DataFrame, id: String,
               vec: String, k: Int, poolSize: Int): DataFrame = {
     require(poolSize >= k, s"poolSize ($poolSize) must be >= k ($k)")

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Two disciplines, both 100 TB-motivated:
   *  - EXPLICIT schemas only. Schema inference is a full extra pass over
   *    the data before the real one; at corpus scale that doubles the
-  *    scan bill. Callers pass the [[graft.streaming.IotStreamPipeline
-  *    .rawSchema]]-style contract they expect.
+  *    scan bill. Callers pass the [[graft.sources.Tables.schemas]]-style
+  *    contract they expect.
   *  - Malformed rows are CAPTURED, not dropped: PERMISSIVE mode lands
   *    them in a `_corrupt_record` audit column, so a bad export shows
   *    up as countable rows instead of silent loss (the same

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.TimeAgg
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -21,23 +22,15 @@ import org.apache.spark.sql.Row
   */
 object IotStreamPipeline {
 
-  /** Schema of the raw event documents in the landing zone. */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Landing-zone source (files play the Mongo change feed; in
     * production, point the connector at the live collection —
     * [[graft.sources.MongoConnectorSource]] builds the option map and
     * incremental-cursor pipeline, and `spark.readStream
     * .format("mongodb")` consumes the change stream with the same
-    * namespace options). */
+    * namespace options). The raw event documents follow the batch
+    * loader's `events` contract. */
   def readRaw(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.schema(rawSchema).parquet(path)
+    spark.readStream.schema(Tables.schemas("events")).parquet(path)
 
   /** Stage layer: typing + derived period keys (streaming-safe
     * projection, no shuffle). */

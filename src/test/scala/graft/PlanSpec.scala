@@ -28,10 +28,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("events.ts loads as TIMESTAMP and ts predicates reach the scan") {
-    // The driver's events.parquet timestamp precision has changed
-    // between rounds (NANOS → MICROS-no-tz); the loader must keep
-    // producing plain TimestampType AT THE SCAN — a post-scan cast
-    // would silently break incremental-load (C3/C4) pushdown.
+    // The declared events schema reads the micros-no-tz ts as plain
+    // TimestampType AT THE SCAN — a post-scan cast would silently
+    // break incremental-load (C3/C4) pushdown.
     val ev = Tables.events(spark, sf)
     assert(ev.schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampType, "events.ts must be TIMESTAMP")
