@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.functions.TextFunctions
-import graft.operators.Dedup
+import graft.operators.{Dedup, Pins}
 import graft.sources.Warehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,21 +14,25 @@ import org.apache.spark.sql.functions._
   * training-data pipeline runs.
   *
   * One cycle =
-  *  1. EXTRACT: landing docs not already accepted (anti join on
-  *     `doc_id` against the corpus — re-delivered docs are skipped, so
+  *  1. EXTRACT: landing docs not already accepted (the corpus's
+  *     `doc_id`s mark them seen — re-delivered docs are skipped, so
   *     crashed or duplicated runs converge).
-  *  2. CURATE: quality score + language agreement on the scan (the H7
-  *     score-first discipline — map-side work, no text ever shuffles
-  *     for docs that fail here).
+  *  2. CURATE: quality score + language agreement, in the same pinned
+  *     pass as the extract (the H7 score-first discipline — map-side
+  *     work, no text ever shuffles for docs that fail here); each new
+  *     doc carries its verdict in the pin.
   *  3. EXACT DEDUP: batch docs whose `md5(text)` already exists in the
   *     corpus are dropped — the corpus STORES `text_hash` at commit, so
   *     this gate reads one pruned column of the archive, never its
   *     text; within the batch the lowest id per hash wins.
   *  4. NEAR-DUP vs ARCHIVE: the batch is signed+banded ONCE (the probe,
   *     the within-batch pair run and the index commit all consume that
-  *     one pass) and probed against the PERSISTED band index
+  *     one pass) and probed ONCE against the PERSISTED band index
   *     ([[Dedup.minhashProbeBands]]) — the archive's text is never
   *     re-read; matches with ≥ `minBands` agreeing bands are rejected.
+  *     The probe's result is pinned, so the keepers, the within-batch
+  *     pair run and the index commit read it instead of re-running the
+  *     index scan, the bucket-cap aggregate and the probe join.
   *  5. NEAR-DUP within batch: [[Dedup.minhashPairsFromBands]] over the
   *     surviving bands → [[Dedup.clusters]] → keep each cluster's
   *     canonical keeper ([[Dedup.applyClusters]]).
@@ -36,7 +40,19 @@ import org.apache.spark.sql.functions._
   *     their band rows merge-upsert into the band-partitioned index —
   *     both keyed writes, so replays are absorbed, and the maintained
   *     index provably equals a from-scratch index of the corpus
-  *     (spec-asserted).
+  *     (spec-asserted). The two writes touch different paths and run
+  *     side by side, one thread each.
+  *
+  * Accounting rides the pins: the landing, new and curated counts are
+  * `Dataset.observe` metrics of the extract pin, the exact-dedup
+  * survivors of its pin and the accepted count of the accepted pin —
+  * none of them runs an execution of its own; the corpus size is the
+  * one figure read back, from the committed table. A metric that fails
+  * to surface throws, naming the cycle and the metric. Every pin the
+  * cycle takes (the extract, exact-dedup, band, archive-probe,
+  * cluster-label and accepted pins, and the write paths' own) is
+  * released once its last consumer has materialized, so a long
+  * `ingestStream` session holds no blocks between micro-batches.
   *
   * Decisions are deterministic and the corpus only grows, so a doc
   * re-landing in any later cycle reaches the same verdict — the
@@ -91,26 +107,41 @@ object CorpusPipeline {
                minQuality: Double = 0.5, minBands: Int = 2,
                maxBucket: Int = 1000): CycleStats = {
     val spark = landing.sparkSession
+    val cycle = "CorpusPipeline.runCycle"
     val corp = corpus(spark, corpusPath, landing)
     val idx = bandIndex(spark, indexPath)
 
-    // 1. extract: skip docs already accepted (replay/crash convergence)
-    val fresh = landing
-      .join(corp.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint() // several consumers; landing may be expensive
-    val nLanding = landing.count()
-    val nNew = fresh.count()
-
-    // 2. curate (score-first: map-side, text never shuffles for drops)
-    val scored = fresh
-      .withColumn("__p", TextFunctions.textProfile(lower(col("text"))))
-      .withColumn("__q",
-        TextFunctions.qualityScoreFromProfile(col("text"), col("__p")))
-      .withColumn("__pl", TextFunctions.langIdFromProfile(col("__p")))
-    val curated = scored
-      .filter(col("__q") >= minQuality && col("__pl") === col("lang"))
-      .drop("__p", "__q", "__pl")
-    val nQualityRejected = nNew - curated.count()
+    // 1. extract + 2. curate, in ONE pinned pass: landing docs already
+    // accepted are skipped (replay/crash convergence); the rest are
+    // scored map-side (score-first: text never shuffles for drops) and
+    // carry their verdict in the pin. The landing, new and curated
+    // counts ride this pass. They are observed above the corpus join,
+    // so it is a left join marking the seen ids (`doc_id` is the
+    // corpus key, so it adds no row), not an anti join: adaptive
+    // execution drops an observation UNDER a join side it prunes as
+    // empty.
+    val isNew = col("__seen").isNull
+    val extract = landing
+      .join(corp.select(col("doc_id"), lit(true).as("__seen")),
+        Seq("doc_id"), "left")
+      .withColumn("__p",
+        when(isNew, TextFunctions.textProfile(lower(col("text")))))
+      .withColumn("__curated", coalesce(
+        TextFunctions.qualityScoreFromProfile(col("text"), col("__p")) >=
+          minQuality &&
+          TextFunctions.langIdFromProfile(col("__p")) === col("lang"),
+        lit(false)))
+      .observe("corpus_fresh", count(lit(1)).as("n_landing"),
+        count(when(isNew, 1)).as("n_new"),
+        count(when(col("__curated"), 1)).as("n_curated"))
+      .filter(isNew)
+      .select(landing.columns.map(col) :+ col("__curated"): _*)
+    val fresh = extract.localCheckpoint()
+    val extracted = Cycle.observed(extract, cycle, "corpus_fresh")
+    val nLanding = extracted.getAs[Long]("n_landing")
+    val nNew = extracted.getAs[Long]("n_new")
+    val nCurated = extracted.getAs[Long]("n_curated")
+    val nQualityRejected = nNew - nCurated
 
     // 3. exact dedup: the corpus stores `text_hash` at commit time, so
     // this gate reads ONE pruned column of the archive — never its text
@@ -119,16 +150,20 @@ object CorpusPipeline {
       if (corp.columns.contains("text_hash"))
         corp.select(col("text_hash").as("__h")).distinct()
       else corp.select(md5(col("text")).as("__h")).distinct()
-    val hashed = curated.withColumn("__h", md5(col("text")))
+    val hashed = fresh.filter(col("__curated")).drop("__curated")
+      .withColumn("__h", md5(col("text")))
     val wHash = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__h")).orderBy(col("doc_id"))
-    val noExact = hashed
+    val unique = hashed
       .join(corpHashes, Seq("__h"), "left_anti")
       .withColumn("__rn", row_number().over(wHash))
       .filter(col("__rn") === 1).drop("__rn")
       .withColumnRenamed("__h", "text_hash")
-      .localCheckpoint() // consumed by the banding pass and the commit
-    val nExactRejected = nNew - nQualityRejected - noExact.count()
+      .observe("corpus_no_exact", count(lit(1)).as("n"))
+    val noExact = unique.localCheckpoint() // banding pass + accepted pin
+    Pins.release(fresh)
+    val nExactRejected =
+      nCurated - Cycle.observed(unique, cycle, "corpus_no_exact").getAs[Long]("n")
 
     // sign + band the batch ONCE; the archive probe, the within-batch
     // pair run and the index commit all consume this one pass
@@ -136,10 +171,14 @@ object CorpusPipeline {
         k, numHashes, rowsPerBand)
       .localCheckpoint()
 
-    // 4. near-dup vs archive (index probe; archive text untouched)
+    // 4. near-dup vs archive (index probe; archive text untouched),
+    // pinned ONCE: the keepers, the within-batch pair run and the index
+    // commit read the pin instead of each re-running the index scan,
+    // the bucket-cap aggregate and the probe join
     val archiveDups = Dedup.minhashProbeBands(idx, batchBands, maxBucket)
       .filter(col("n_bands") >= minBands)
       .select(col("doc_id")).distinct()
+      .localCheckpoint()
     val noArchiveDup = noExact.join(archiveDups, Seq("doc_id"), "left_anti")
     val keptBands = batchBands
       .join(archiveDups.select(col("doc_id").as("doc")), Seq("doc"), "left_anti")
@@ -148,24 +187,29 @@ object CorpusPipeline {
     val pairs = Dedup.minhashPairsFromBands(keptBands)
       .filter(col("n_bands") >= minBands)
     val clusters = Dedup.clusters(pairs, "doc_a", "doc_b")
-    val accepted = Dedup.applyClusters(noArchiveDup, "doc_id",
+    val keepers = Dedup.applyClusters(noArchiveDup, "doc_id",
         clusters, "doc_id", "cluster_id")
-      .localCheckpoint() // written twice below (corpus + index)
-    val nAccepted = accepted.count()
+      .observe("corpus_accepted", count(lit(1)).as("n"))
+    val accepted = keepers.localCheckpoint() // written twice below
+    Pins.release(noExact, clusters)
+    val nAccepted =
+      Cycle.observed(keepers, cycle, "corpus_accepted").getAs[Long]("n")
     val nNearDupRejected = nNew - nQualityRejected - nExactRejected - nAccepted
 
     // 6. commit: keyed writes absorb replays; the index rows are the
-    // accepted docs' slice of the ONE banding pass
-    if (nAccepted > 0) {
-      Warehouse.mergeUpsert(accepted, corpusPath,
-        partitionCols = Seq("lang"), key = Seq("doc_id"),
-        versionCol = "doc_id")
-      Warehouse.mergeUpsert(
-        keptBands.join(accepted.select(col("doc_id").as("doc")),
-          Seq("doc"), "left_semi"),
-        indexPath, partitionCols = Seq("band"),
-        key = Seq("doc", "band"), versionCol = "doc")
-    }
+    // accepted docs' slice of the ONE banding pass. The two writes
+    // touch different paths, so they run side by side.
+    if (nAccepted > 0)
+      Cycle.overlapped(
+        () => Warehouse.mergeUpsert(accepted, corpusPath,
+          partitionCols = Seq("lang"), key = Seq("doc_id"),
+          versionCol = "doc_id"),
+        () => Warehouse.mergeUpsert(
+          keptBands.join(accepted.select(col("doc_id").as("doc")),
+            Seq("doc"), "left_semi"),
+          indexPath, partitionCols = Seq("band"),
+          key = Seq("doc", "band"), versionCol = "doc"))
+    Pins.release(accepted, batchBands, archiveDups)
     val corpusSize = corpus(spark, corpusPath, landing).count()
     CycleStats(nLanding, nNew, nQualityRejected, nExactRejected,
       nNearDupRejected, nAccepted, corpusSize)

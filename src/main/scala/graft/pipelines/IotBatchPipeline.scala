@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import graft.operators.Stage
+import graft.operators.{Pins, Stage}
 import graft.sources.Warehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,12 +21,18 @@ import org.apache.spark.sql.functions._
   *     dlt/[[graft.sources.MongoConnectorSource]] `$gte` contract) and
   *     the keyed upsert absorbs it, which is what makes
   *     equal-cursor ties at the watermark safe.
-  *  2. STAGE: type + derive period keys ([[Stage.stageEvents]]) and
-  *     MERGE-upsert by `event_id` into the day-partitioned stage table
-  *     — only touched partitions are read or rewritten.
+  *  2. STAGE: type + derive period keys ([[Stage.stageEvents]]), pin
+  *     the slice once and MERGE-upsert it by `event_id` into the
+  *     day-partitioned stage table — only touched partitions are read
+  *     or rewritten. The slice's max cursor (the next watermark) is a
+  *     `Dataset.observe` metric of that pin's pass, not an execution of
+  *     its own; the pin is released once the merge has landed.
   *  3. AGG: [[Warehouse.refreshAggregate]] (inclusive watermark, so
   *     the replayed boundary's period re-aggregates too) rebuilds ONLY
-  *     the periods the increment touched, from stage.
+  *     the periods the increment touched, from stage. The cadences
+  *     write different tables and only read stage, so their refreshes
+  *     run side by side, one thread each; a failing refresh is
+  *     rethrown as itself once the others have finished.
   *
   * `cursorCol` must be MONOTONE over landing order (dlt's incremental
   * cursor is ingest order). It defaults to the event `ts`, which is a
@@ -40,13 +46,22 @@ import org.apache.spark.sql.functions._
   *
   * The stage watermark persists in a `_graft_watermark` sidecar next
   * to the stage data (underscore-prefixed — invisible to parquet
-  * readers), so a steady-state cycle reads one tiny file plus the agg
-  * table's one-row max, never a history scan; if the sidecar is
-  * missing (pre-existing table, manual surgery) the watermark is
-  * recovered with a full `max(cursor)` probe once and re-persisted.
-  * Cost per cycle scales with the increment and its touched periods,
-  * never with warehouse history — the property that lets a 15-minute
-  * cadence survive a 100 TB table.
+  * readers), so reading it is one tiny file, never a history scan; if
+  * the sidecar is missing (pre-existing table, manual surgery) the
+  * watermark is recovered with a full `max(cursor)` probe once and
+  * re-persisted.
+  *
+  * Cost per cycle: the extract, the stage merge and the daily slice
+  * scale with the increment and its touched periods. The agg refreshes
+  * do NOT all stay clear of warehouse history: stage is partitioned by
+  * `day`, and each refresh's touched-period probe filters stage on the
+  * cursor (a pushed-down data filter, no partition filter), so it
+  * lists every stage file and reads each footer (row groups wholly
+  * below the watermark are skipped); the weekly and monthly slices
+  * semi-join stage on `week`/`month`, which are not partition columns,
+  * so they get no partition pruning and read every stage file each
+  * cycle (the executed plans show no partition filter on those scans;
+  * only the daily slice prunes, by dynamic partition pruning on `day`).
   */
 object IotBatchPipeline {
 
@@ -144,30 +159,34 @@ object IotBatchPipeline {
     }
     // 2. stage: typed projection + keyed merge into day partitions.
     //    localCheckpoint pins ONE snapshot of the slice: the merge and
-    //    the watermark probe below must see the same rows — two
-    //    independent executions against a live/re-listed source could
-    //    let the probe see rows the merge never staged and advance the
-    //    watermark past data that was never loaded (silent loss). The
-    //    increment's max cursor is then read off the pinned SLICE
-    //    (bounded), never the table.
-    val staged = Stage.stageEvents(incoming).localCheckpoint()
+    //    the watermark must see the same rows — two independent
+    //    executions against a live/re-listed source could let the
+    //    watermark see rows the merge never staged and advance past
+    //    data that was never loaded (silent loss). The increment's max
+    //    cursor rides the pin as an observed metric (bounded by the
+    //    slice, never the table, and no execution of its own).
+    val slice = Stage.stageEvents(incoming)
+      .observe("iot_slice", max(col(cursorCol)).as("slice_max"))
+    val staged = slice.localCheckpoint()
     Warehouse.mergeUpsert(staged, stagePath, partitionCols = Seq("day"),
       key = Seq("event_id"), versionCol = cursorCol)
-    val sliceMax = Option(staged.agg(max(col(cursorCol))).head().get(0))
-      .map(_.asInstanceOf[java.sql.Timestamp])
+    Pins.release(staged)
+    val sliceMax = Option(Cycle.observed(slice, "IotBatchPipeline.runCycles",
+      "iot_slice").get(0)).map(_.asInstanceOf[java.sql.Timestamp])
     (prevWm ++ sliceMax).reduceOption((a, b) => if (a.after(b)) a else b)
       .foreach(persistWatermark(spark, stagePath, _))
     // 3. agg: touched-period-only rollup refresh from stage, once per
     //    cadence. Inclusive watermark: the extract replays its
     //    boundary, so each refresh must re-aggregate the boundary
     //    period too — a strict delta would stage an equal-cursor tie
-    //    but never roll it up.
+    //    but never roll it up. The cadences write different tables and
+    //    only read stage, so their refreshes run side by side.
     val stage = spark.read.parquet(stagePath)
-    cadences.foreach { c =>
+    Cycle.overlapped(cadences.map { c => () =>
       Warehouse.refreshAggregate(
         c.prepare(stage), c.aggPath, partitionCols = c.partitionCols,
         rawWatermarkCol = cursorCol, aggWatermarkCol = "last_ts",
         aggregate = c.aggregate, inclusiveWatermark = true)
-    }
+    }: _*)
   }
 }

@@ -65,8 +65,11 @@ object Warehouse {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn", "__src")
     // localCheckpoint: the merged plan reads the files the write below
-    // replaces — materialize before overwriting them
-    overwritePartitions(merged.localCheckpoint(), path, partitionCols)
+    // replaces — materialize before overwriting them; the pin is dead
+    // once the write has landed
+    val pinned = merged.localCheckpoint()
+    overwritePartitions(pinned, path, partitionCols)
+    graft.operators.Pins.release(pinned)
   }
 
   /** CONTINUOUS-AGGREGATE refresh — the TimescaleDB continuous
@@ -188,9 +191,10 @@ object Warehouse {
           case (df, (k, v)) => df.withColumn(k, lit(v))
         }
         // localCheckpoint: the coalesced plan reads the very files the
-        // dynamic overwrite below replaces
-        overwritePartitions(part.coalesce(want).localCheckpoint(),
-          path, partitionCols)
+        // dynamic overwrite below replaces; released once written
+        val pinned = part.coalesce(want).localCheckpoint()
+        overwritePartitions(pinned, path, partitionCols)
+        graft.operators.Pins.release(pinned)
         Some((rel, files.length, want))
       }
     }
@@ -272,6 +276,7 @@ object Warehouse {
     val kept = survivors.select(partitionCols.map(col): _*).distinct()
       .collect().map(r => partitionCols.map(c => r.get(r.fieldIndex(c))).mkString("/")).toSet
     overwritePartitions(survivors, path, partitionCols)
+    graft.operators.Pins.release(survivors)
     touched.toSeq.map { vals =>
       val rel = partitionCols.zip(vals).map { case (c, v) =>
         s"$c=" + java.net.URLEncoder.encode(String.valueOf(v), "UTF-8")

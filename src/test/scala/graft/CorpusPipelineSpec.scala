@@ -18,13 +18,13 @@ class CorpusPipelineSpec extends SparkSpec {
     val docs = landing()
     val cut = 250L
     // cycle 1: first half of the landing
-    val s1 = CorpusPipeline.runCycle(docs.filter($"doc_id" < cut),
-      corpusPath, indexPath)
+    val s1 = unpinned(CorpusPipeline.runCycle(docs.filter($"doc_id" < cut),
+      corpusPath, indexPath))
     assert(s1.nAccepted > 0 && s1.corpusSize == s1.nAccepted)
     assert(s1.nNew == s1.nRejectedQuality + s1.nRejectedExact +
       s1.nRejectedNearDup + s1.nAccepted)
     // cycle 2: FULL landing re-delivered (replay of cycle 1 + new docs)
-    val s2 = CorpusPipeline.runCycle(docs, corpusPath, indexPath)
+    val s2 = unpinned(CorpusPipeline.runCycle(docs, corpusPath, indexPath))
     // replayed ACCEPTED docs are skipped at extract; replayed rejected
     // docs re-evaluate (deterministically — no rejected ledger kept)
     assert(s2.nNew == docs.count() - s1.nAccepted)
@@ -51,8 +51,15 @@ class CorpusPipelineSpec extends SparkSpec {
     // cycle 3: pure replay accepts nothing and leaves the state alone
     // (rejected docs re-evaluate to the same verdicts; accepted docs
     // are skipped at extract)
-    val s3 = CorpusPipeline.runCycle(docs, corpusPath, indexPath)
+    val s3 = unpinned(CorpusPipeline.runCycle(docs, corpusPath, indexPath))
     assert(s3.nAccepted == 0 && s3.corpusSize == s2.corpusSize)
+    // the accounting, field for field (landing, new, quality, exact,
+    // near-dup, accepted, corpus size): the figures a direct count of
+    // each stage's frame gives on this fixture
+    assert(Seq(s1, s2, s3) == Seq(
+      CorpusPipeline.CycleStats(250, 250, 191, 0, 2, 57, 57),
+      CorpusPipeline.CycleStats(500, 443, 377, 0, 3, 63, 120),
+      CorpusPipeline.CycleStats(500, 380, 377, 0, 3, 0, 120)))
 
     // every accepted doc came through unmodified
     val cols = Seq("doc_id", "text", "lang", "source")
@@ -112,5 +119,48 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/s_corpus").count() == before)
     val si2 = spark.read.parquet(s"$dir/s_index").select("doc", "band", "bucket")
     assert(si2.exceptAll(si).count() == 0 && si.exceptAll(si2).count() == 0)
+  }
+
+  test("accounting surfaces on empty, fully-replayed and fully-rejected batches, broadcast or not") {
+    val docs = landing()
+    // with broadcasts off every join sorts and merges; adaptive execution
+    // then prunes a join with an empty side, which is where a metric
+    // observed under that join goes missing
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    Seq(None, Some("-1")).foreach { threshold =>
+      threshold.foreach(spark.conf.set(key, _))
+      try {
+        val dir = Files.createTempDirectory("graft-corpus-edge").toString
+        def cycle(batch: org.apache.spark.sql.DataFrame, minQuality: Double = 0.5) =
+          unpinned(CorpusPipeline.runCycle(batch, s"$dir/corpus", s"$dir/index",
+            minQuality = minQuality))
+        val first = cycle(docs.filter($"doc_id" < 60L))
+        assert(first.nAccepted > 0)
+        val size = first.corpusSize
+        // nothing landed
+        assert(cycle(docs.limit(0)) ==
+          CorpusPipeline.CycleStats(0, 0, 0, 0, 0, 0, size))
+        // only docs already in the corpus: all skipped at extract
+        val replay = docs.join(CorpusPipeline.corpus(spark, s"$dir/corpus", docs)
+          .select("doc_id"), Seq("doc_id"), "left_semi")
+        assert(cycle(replay) ==
+          CorpusPipeline.CycleStats(size, 0, 0, 0, 0, 0, size))
+        // every new doc fails curation (no score reaches 2.0)
+        val unseen = docs.filter($"doc_id" >= 60L && $"doc_id" < 90L)
+        val n = unseen.count()
+        assert(cycle(unseen, minQuality = 2.0) ==
+          CorpusPipeline.CycleStats(n, n, n, 0, 0, 0, size))
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  test("a pin whose observed metrics never surface fails naming the cycle and the metrics") {
+    val unobserved = spark.range(3).toDF()
+    unobserved.collect()
+    val e = intercept[IllegalStateException](
+      graft.pipelines.Cycle.observed(unobserved, "SomeCycle", "some_metrics"))
+    assert(e.getMessage.contains("SomeCycle") &&
+      e.getMessage.contains("some_metrics"), e.getMessage)
   }
 }

@@ -10,6 +10,39 @@ import java.nio.file.Files
 class IotBatchPipelineSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Each cadence's from-scratch rollup of the full stage of `ev`. */
+  private def recompute(ev: org.apache.spark.sql.DataFrame) = {
+    val st = graft.operators.Stage.stageEvents(ev)
+    val wk = date_format(graft.operators.TimeAgg.weekBucket(col("ts")), "yyyy-MM-dd")
+    Map(
+      "daily" -> st.groupBy(col("user_id"), col("day")),
+      "weekly" -> st.withColumn("week", wk).groupBy(col("user_id"), col("week")),
+      "monthly" -> st.groupBy(col("user_id"), col("month")))
+      .map { case (name, g) => name -> g.agg(
+        graft.functions.Portable.fixedSum(col("value"), 4).as("value_sum"),
+        count(lit(1)).as("n_events"),
+        max(col("ts")).as("last_ts")) }
+  }
+
+  /** Asserts the `names` cadence tables under `root` each equal their
+    * full recompute. */
+  private def assertRecomputed(root: String,
+                               want: Map[String, org.apache.spark.sql.DataFrame],
+                               names: Seq[String]): Unit =
+    names.foreach { name =>
+      val w = want(name)
+      val got = spark.read.parquet(s"$root/$name")
+        .select(w.columns.map(col): _*)
+      if (got.exceptAll(w).count() != 0) {
+        println(s"=== $name GOT-not-WANT ===")
+        got.exceptAll(w).show(10, false)
+        println(s"=== $name WANT-not-GOT ===")
+        w.exceptAll(got).show(10, false)
+      }
+      assert(got.exceptAll(w).count() == 0 && w.exceptAll(got).count() == 0,
+        s"$name cadence diverged from the full recompute")
+    }
+
   test("incremental cycles == full recompute; empty cycle is a no-op") {
     val stage = Files.createTempDirectory("graft-bp-stage").toString + "/stage"
     val agg = Files.createTempDirectory("graft-bp-agg").toString + "/agg"
@@ -19,12 +52,13 @@ class IotBatchPipelineSpec extends SparkSpec {
 
     // cycle 1: first half of the landing (by time — the cursor order a
     // landing zone provides)
-    IotBatchPipeline.runCycle(ev.filter(col("ts").cast("double") <= cut), stage, agg)
+    unpinned(IotBatchPipeline.runCycle(
+      ev.filter(col("ts").cast("double") <= cut), stage, agg))
     assert(spark.read.parquet(stage).count() > 0)
 
     // cycle 2: full landing visible (second half arrived); the slice
     // re-extracts only from the watermark, boundary replayed
-    IotBatchPipeline.runCycle(ev, stage, agg)
+    unpinned(IotBatchPipeline.runCycle(ev, stage, agg))
 
     // stage table == the typed projection of the full landing, exactly
     val gotStage = spark.read.parquet(stage)
@@ -47,7 +81,7 @@ class IotBatchPipelineSpec extends SparkSpec {
     // cycle 3: nothing new — table states must be byte-stable
     val stageBefore = gotStage.collect().map(_.toSeq).toSet
     val aggBefore = gotAgg.collect().map(_.toSeq).toSet
-    IotBatchPipeline.runCycle(ev, stage, agg)
+    unpinned(IotBatchPipeline.runCycle(ev, stage, agg))
     assert(spark.read.parquet(stage).collect().map(_.toSeq).toSet == stageBefore)
     assert(canonAgg(spark.read.parquet(agg)).collect().map(_.toSeq).toSet == aggBefore)
 
@@ -60,7 +94,7 @@ class IotBatchPipelineSpec extends SparkSpec {
     val tieUser = ev.limit(1).select("user_id").head().getLong(0)
     val tie = Seq((999999999L, wmTs, tieUser, "view", 1.0, """{"k": 1}"""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    IotBatchPipeline.runCycle(ev.unionByName(tie), stage, agg)
+    unpinned(IotBatchPipeline.runCycle(ev.unionByName(tie), stage, agg))
     assert(spark.read.parquet(stage)
       .filter(col("event_id") === 999999999L).count() == 1)
     val tieDay = graft.operators.TimeAgg.dayKey(lit(wmTs))
@@ -85,32 +119,13 @@ class IotBatchPipelineSpec extends SparkSpec {
       .head().getDouble(0)
 
     // growing landing: half, then all
-    IotBatchPipeline.runCycles(ev.filter(col("ts").cast("double") <= cut), stage, cadences)
-    IotBatchPipeline.runCycles(ev, stage, cadences)
+    unpinned(IotBatchPipeline.runCycles(
+      ev.filter(col("ts").cast("double") <= cut), stage, cadences))
+    unpinned(IotBatchPipeline.runCycles(ev, stage, cadences))
 
     // every cadence == a from-scratch rollup of the full stage
-    val st = graft.operators.Stage.stageEvents(ev)
-    val wk = date_format(graft.operators.TimeAgg.weekBucket(col("ts")), "yyyy-MM-dd")
-    val want = Map(
-      "daily" -> st.groupBy(col("user_id"), col("day")),
-      "weekly" -> st.withColumn("week", wk).groupBy(col("user_id"), col("week")),
-      "monthly" -> st.groupBy(col("user_id"), col("month")))
-      .map { case (name, g) => name -> g.agg(
-        graft.functions.Portable.fixedSum(col("value"), 4).as("value_sum"),
-        count(lit(1)).as("n_events"),
-        max(col("ts")).as("last_ts")) }
-    want.foreach { case (name, w) =>
-      val got = spark.read.parquet(s"$root/$name")
-        .select(w.columns.map(col): _*)
-      if (got.exceptAll(w).count() != 0) {
-        println(s"=== $name GOT-not-WANT ===")
-        got.exceptAll(w).show(10, false)
-        println(s"=== $name WANT-not-GOT ===")
-        w.exceptAll(got).show(10, false)
-      }
-      assert(got.exceptAll(w).count() == 0 && w.exceptAll(got).count() == 0,
-        s"$name cadence diverged from the full recompute")
-    }
+    val want = recompute(ev)
+    assertRecomputed(root, want, want.keys.toSeq)
 
     // an empty cycle re-aggregates only the boundary period of each
     // cadence: a COLD weekly partition's files must stay byte-for-byte
@@ -131,13 +146,31 @@ class IotBatchPipelineSpec extends SparkSpec {
     val (coldWeek, hotWeek) = (weeks.getString(0), weeks.getString(1))
     assert(coldWeek != hotWeek, "test data must span at least two weeks")
     val coldBefore = partitionFiles("weekly", s"week=$coldWeek")
-    IotBatchPipeline.runCycles(ev, stage, cadences)
+    unpinned(IotBatchPipeline.runCycles(ev, stage, cadences))
     assert(partitionFiles("weekly", s"week=$coldWeek") == coldBefore,
       "an untouched week partition was rewritten by an empty cycle")
     // while every cadence's content is still exactly the recompute
-    want.foreach { case (name, w) =>
-      val got = spark.read.parquet(s"$root/$name").select(w.columns.map(col): _*)
-      assert(got.exceptAll(w).count() == 0 && w.exceptAll(got).count() == 0)
-    }
+    assertRecomputed(root, want, want.keys.toSeq)
+  }
+
+  test("a failing cadence refresh is rethrown as itself; the other refreshes land") {
+    class CadenceFailure extends RuntimeException("weekly aggregate failed")
+    val root = Files.createTempDirectory("graft-bp-fail").toString
+    val stage = root + "/stage"
+    val weekly = IotBatchPipeline.weeklyCadence(root + "/weekly")
+    val broken = weekly.copy(aggregate = _ => throw new CadenceFailure)
+    val ev = graft.sources.Tables.events(spark, sf)
+    def cadences(w: IotBatchPipeline.AggCadence) = Seq(
+      IotBatchPipeline.dailyCadence(root + "/daily"), w,
+      IotBatchPipeline.monthlyCadence(root + "/monthly"))
+    // the cadence's own exception, not a wrapper from the overlap
+    intercept[CadenceFailure](
+      IotBatchPipeline.runCycles(ev, stage, cadences(broken)))
+    // the refreshes beside it finished before the call returned
+    val want = recompute(ev)
+    assertRecomputed(root, want, Seq("daily", "monthly"))
+    // a re-run with the fixed cadence converges on the recompute
+    unpinned(IotBatchPipeline.runCycles(ev, stage, cadences(weekly)))
+    assertRecomputed(root, want, want.keys.toSeq)
   }
 }

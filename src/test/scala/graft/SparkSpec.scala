@@ -28,4 +28,14 @@ object TestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def sf: String = TestSession.sf
+
+  /** Runs `call` and asserts it left the session's persistent RDDs as
+    * it found them: a call that returns no frame may retain no pin. */
+  def unpinned[T](call: => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = call
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
+      "the call left pinned RDDs behind")
+    out
+  }
 }
