@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   *     their band rows merge-upsert into the band-partitioned index —
   *     both keyed writes, so replays are absorbed, and the maintained
   *     index provably equals a from-scratch index of the corpus
-  *     (spec-asserted). The two writes touch different paths and run
-  *     side by side, one thread each.
+  *     (spec-asserted). The index commit follows a corpus commit that
+  *     succeeded, so the index never holds a doc the corpus lacks.
   *
   * Accounting rides the pins: the landing, new and curated counts are
   * `Dataset.observe` metrics of the extract pin, the exact-dedup
@@ -119,7 +119,9 @@ object CorpusPipeline {
     // so it is a left join marking the seen ids (`doc_id` is the
     // corpus key, so it adds no row), not an anti join: adaptive
     // execution drops an observation UNDER a join side it prunes as
-    // empty.
+    // empty. The landing count is taken below the new-doc filter, so
+    // the observation sits inside `extract` rather than at the top of
+    // the pin (where `Pins.pinObserved` places it).
     val isNew = col("__seen").isNull
     val extract = landing
       .join(corp.select(col("doc_id"), lit(true).as("__seen")),
@@ -136,8 +138,10 @@ object CorpusPipeline {
         count(when(col("__curated"), 1)).as("n_curated"))
       .filter(isNew)
       .select(landing.columns.map(col) :+ col("__curated"): _*)
-    val fresh = extract.localCheckpoint()
-    val extracted = Cycle.observed(extract, cycle, "corpus_fresh")
+    val fresh = Pins.pin(extract)
+    val extracted = Cycle.metrics(
+      extract.queryExecution.observedMetrics.get("corpus_fresh"), cycle,
+      "corpus_fresh")
     val nLanding = extracted.getAs[Long]("n_landing")
     val nNew = extracted.getAs[Long]("n_new")
     val nCurated = extracted.getAs[Long]("n_curated")
@@ -154,16 +158,16 @@ object CorpusPipeline {
       .withColumn("__h", md5(col("text")))
     val wHash = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__h")).orderBy(col("doc_id"))
-    val unique = hashed
+    // pinned: the banding pass and the accepted pin both read it
+    val (noExact, uniqueRow) = Pins.pinObserved(hashed
       .join(corpHashes, Seq("__h"), "left_anti")
       .withColumn("__rn", row_number().over(wHash))
       .filter(col("__rn") === 1).drop("__rn")
-      .withColumnRenamed("__h", "text_hash")
-      .observe("corpus_no_exact", count(lit(1)).as("n"))
-    val noExact = unique.localCheckpoint() // banding pass + accepted pin
+      .withColumnRenamed("__h", "text_hash"),
+      "corpus_no_exact", count(lit(1)).as("n"))
     Pins.release(fresh)
-    val nExactRejected =
-      nCurated - Cycle.observed(unique, cycle, "corpus_no_exact").getAs[Long]("n")
+    val nExactRejected = nCurated -
+      Cycle.metrics(uniqueRow, cycle, "corpus_no_exact").getAs[Long]("n")
 
     // sign + band the batch ONCE; the archive probe, the within-batch
     // pair run and the index commit all consume this one pass
@@ -187,28 +191,32 @@ object CorpusPipeline {
     val pairs = Dedup.minhashPairsFromBands(keptBands)
       .filter(col("n_bands") >= minBands)
     val clusters = Dedup.clusters(pairs, "doc_a", "doc_b")
-    val keepers = Dedup.applyClusters(noArchiveDup, "doc_id",
-        clusters, "doc_id", "cluster_id")
-      .observe("corpus_accepted", count(lit(1)).as("n"))
-    val accepted = keepers.localCheckpoint() // written twice below
+    // pinned: written twice below (corpus + index)
+    val (accepted, acceptedRow) = Pins.pinObserved(
+      Dedup.applyClusters(noArchiveDup, "doc_id", clusters, "doc_id",
+        "cluster_id"),
+      "corpus_accepted", count(lit(1)).as("n"))
     Pins.release(noExact, clusters)
     val nAccepted =
-      Cycle.observed(keepers, cycle, "corpus_accepted").getAs[Long]("n")
+      Cycle.metrics(acceptedRow, cycle, "corpus_accepted").getAs[Long]("n")
     val nNearDupRejected = nNew - nQualityRejected - nExactRejected - nAccepted
 
     // 6. commit: keyed writes absorb replays; the index rows are the
-    // accepted docs' slice of the ONE banding pass. The two writes
-    // touch different paths, so they run side by side.
-    if (nAccepted > 0)
-      Cycle.overlapped(
-        () => Warehouse.mergeUpsert(accepted, corpusPath,
-          partitionCols = Seq("lang"), key = Seq("doc_id"),
-          versionCol = "doc_id"),
-        () => Warehouse.mergeUpsert(
-          keptBands.join(accepted.select(col("doc_id").as("doc")),
-            Seq("doc"), "left_semi"),
-          indexPath, partitionCols = Seq("band"),
-          key = Seq("doc", "band"), versionCol = "doc"))
+    // accepted docs' slice of the ONE banding pass. The index commit
+    // FOLLOWS a corpus commit that succeeded, never runs beside it: an
+    // index that holds docs the corpus lacks would make a replay probe
+    // each such doc against its own bands and reject it as a near-dup
+    // of itself, so it would never enter the corpus.
+    if (nAccepted > 0) {
+      Warehouse.mergeUpsert(accepted, corpusPath,
+        partitionCols = Seq("lang"), key = Seq("doc_id"),
+        versionCol = "doc_id")
+      Warehouse.mergeUpsert(
+        keptBands.join(accepted.select(col("doc_id").as("doc")),
+          Seq("doc"), "left_semi"),
+        indexPath, partitionCols = Seq("band"),
+        key = Seq("doc", "band"), versionCol = "doc")
+    }
     Pins.release(accepted, batchBands, archiveDups)
     val corpusSize = corpus(spark, corpusPath, landing).count()
     CycleStats(nLanding, nNew, nQualityRejected, nExactRejected,

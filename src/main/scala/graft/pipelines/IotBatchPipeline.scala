@@ -158,20 +158,19 @@ object IotBatchPipeline {
       case None => raw
     }
     // 2. stage: typed projection + keyed merge into day partitions.
-    //    localCheckpoint pins ONE snapshot of the slice: the merge and
-    //    the watermark must see the same rows — two independent
-    //    executions against a live/re-listed source could let the
-    //    watermark see rows the merge never staged and advance past
-    //    data that was never loaded (silent loss). The increment's max
-    //    cursor rides the pin as an observed metric (bounded by the
-    //    slice, never the table, and no execution of its own).
-    val slice = Stage.stageEvents(incoming)
-      .observe("iot_slice", max(col(cursorCol)).as("slice_max"))
-    val staged = slice.localCheckpoint()
+    //    The pin holds ONE snapshot of the slice: the merge and the
+    //    watermark must see the same rows — two independent executions
+    //    against a live/re-listed source could let the watermark see
+    //    rows the merge never staged and advance past data that was
+    //    never loaded (silent loss). The increment's max cursor rides
+    //    the pin as an observed metric (bounded by the slice, never the
+    //    table, and no execution of its own).
+    val (staged, sliceRow) = Pins.pinObserved(Stage.stageEvents(incoming),
+      "iot_slice", max(col(cursorCol)).as("slice_max"))
     Warehouse.mergeUpsert(staged, stagePath, partitionCols = Seq("day"),
       key = Seq("event_id"), versionCol = cursorCol)
     Pins.release(staged)
-    val sliceMax = Option(Cycle.observed(slice, "IotBatchPipeline.runCycles",
+    val sliceMax = Option(Cycle.metrics(sliceRow, "IotBatchPipeline.runCycles",
       "iot_slice").get(0)).map(_.asInstanceOf[java.sql.Timestamp])
     (prevWm ++ sliceMax).reduceOption((a, b) => if (a.after(b)) a else b)
       .foreach(persistWatermark(spark, stagePath, _))

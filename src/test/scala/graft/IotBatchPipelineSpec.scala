@@ -173,4 +173,29 @@ class IotBatchPipelineSpec extends SparkSpec {
     unpinned(IotBatchPipeline.runCycles(ev, stage, cadences(weekly)))
     assertRecomputed(root, want, want.keys.toSeq)
   }
+
+  test("an interrupted caller stops every overlapped write before it returns") {
+    val started = new java.util.concurrent.CountDownLatch(2)
+    val stopped = new java.util.concurrent.atomic.AtomicInteger
+    def write(): Unit = {
+      started.countDown()
+      try Thread.sleep(60000)
+      catch { case e: InterruptedException => stopped.incrementAndGet(); throw e }
+    }
+    @volatile var seen: Option[(Throwable, Int, Boolean)] = None
+    val caller = new Thread(() =>
+      try graft.pipelines.Cycle.overlapped(() => write(), () => write())
+      catch { case e: Throwable =>
+        seen = Some((e, stopped.get, Thread.currentThread().isInterrupted))
+      })
+    caller.start()
+    started.await()
+    caller.interrupt()
+    caller.join(10000)
+    assert(!caller.isAlive, "the interrupted caller is still blocked")
+    val (e, writesStopped, flag) = seen.get
+    assert(e.isInstanceOf[InterruptedException], e)
+    assert(writesStopped == 2, "the call returned before its writes had stopped")
+    assert(flag, "the caller's interrupt flag was not restored")
+  }
 }
