@@ -2,7 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.Row
 
-/** What the two cycles share: accounting read off their pins, and
+/** Helpers of the pipeline cycles: accounting read off their pins, and
   * independent table writes run side by side. */
 private[graft] object Cycle {
 
