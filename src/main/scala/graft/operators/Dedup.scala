@@ -372,8 +372,10 @@ object Dedup {
     * overwhelming dup-graph shape — are already converged at the seed
     * either way. Lineage is cut per iteration with `localCheckpoint`
     * (the standard iterative-graph pattern — GraphX/GraphFrames do the
-    * same) so plans don't grow exponentially. Convergence is detected
-    * with a `limit(1)` changed-row probe, not a full count.
+    * same) so plans don't grow exponentially. The loop runs on
+    * [[Pins.iterate]]: the changed-row count rides each label pin's
+    * pass, and labels still changing after `maxIter` rounds throw an
+    * error naming the loop — never a partial clustering.
     */
   def clusters(pairs: DataFrame, a: String, b: String,
                maxIter: Int = 20, twoHop: Boolean = true): DataFrame =
@@ -397,27 +399,14 @@ object Dedup {
     // symmetric so every id appears as x, and pair/star clusters are
     // already converged at the seed — one grouped min replaces a whole
     // propagate iteration. The changed flag (label < id) rides the pin:
-    // it is the DELTA FRONTIER the next round propagates from.
-    // the convergence probe rides the pin as an observe metric (r17):
-    // the standalone filter+limit probe cost its own job (plus plan/AQE
-    // overhead) per round, for an answer the pin pass already knew; the
-    // old probe stays as the fallback when no metrics surface
-    def changedCount = count(when(col("changed"), lit(1))).as("n_changed")
-    def probeSaysConverged(pinned: DataFrame,
-                           row: Option[org.apache.spark.sql.Row]): Boolean =
-      row.map(_.getLong(0) == 0L)
-        .getOrElse(pinned.filter(col("changed")).limit(1).count() == 0)
-    val (seedPin, seedProbe) = Pins.pinObserved(
-      edges.groupBy(col("x").as("id"))
-        .agg(min(col("y")).as("mn"))
-        .select(col("id"), least(col("id"), col("mn")).as("label"),
-          (col("mn") < col("id")).as("changed")),
-      "cc_probe_seed", changedCount)
-    var labelsPin = seedPin
-    var converged = probeSaysConverged(seedPin, seedProbe)
-    var it = 0
-    while (!converged && it < maxIter) {
-      val labels = labelsPin
+    // it is the DELTA FRONTIER the next round propagates from, and its
+    // count is the convergence witness observed on each pin's pass.
+    val seed = edges.groupBy(col("x").as("id"))
+      .agg(min(col("y")).as("mn"))
+      .select(col("id"), least(col("id"), col("mn")).as("label"),
+        (col("mn") < col("id")).as("changed"))
+    val (labelsPin, rounds) = Pins.iterate("Dedup.clusters", seed, maxIter,
+        count(when(col("changed"), lit(1))).as("n_changed")) { labels =>
       // Delta propagation (r17, guide §2.3 "shuffle fewer bytes"): only
       // labels that CHANGED last round can lower a neighbor this round.
       // Exact, not approximate — an unchanged neighbor y has
@@ -441,43 +430,33 @@ object Dedup {
             col("label").as("old")))
         .groupBy(col("id"))
         .agg(min(col("nbr")).as("cand"), max(col("old")).as("label"))
-      val stepped =
-        if (!twoHop) cand.select(col("id"), col("cand").as("label"),
-          (col("cand") < col("label")).as("changed"))
-        else {
-          // pointer jump through the PREVIOUS round's pinned labels — a
-          // measured LEAF (broadcast-hash when node-sized, co-partitioned
-          // at scale) — instead of the round's own unmaterialized cand
-          // frame, whose self-join re-derived the entire propagate
-          // subtree per round (the r16 plans show the duplicated
-          // pipeline + an extra cand-keyed exchange and two sorts). The
-          // stale jump still halves paths (any label IS a node id whose
-          // previous label is a valid, smaller reachable id); the
-          // one-hop part stays complete, so the fixpoint is identical —
-          // convergence detection is unchanged (a round with no change).
-          val j = labels.select(col("id").as("__jid"), col("label").as("__jlab"))
-          cand.join(j, col("cand") === col("__jid"), "left")
-            .select(col("id"),
-              least(col("cand"), coalesce(col("__jlab"), col("cand")))
-                .as("__fin"), col("label").as("__old"))
-            .select(col("id"), col("__fin").as("label"),
-              (col("__fin") < col("__old")).as("changed"))
-        }
-      // labels only ever decrease, so "changed" is just new < old —
-      // carried as a flag on the checkpointed result; the convergence
-      // count rides the pin materialization as an observe metric
-      val (next, probe) = Pins.pinObserved(stepped, s"cc_probe_$it",
-        changedCount)
-      converged = probeSaysConverged(next, probe)
-      Pins.release(labelsPin) // superseded label pin
-      labelsPin = next
-      it += 1
-    }
+      // labels only ever decrease, so "changed" is just new < old
+      if (!twoHop) cand.select(col("id"), col("cand").as("label"),
+        (col("cand") < col("label")).as("changed"))
+      else {
+        // pointer jump through the PREVIOUS round's pinned labels — a
+        // measured LEAF (broadcast-hash when node-sized, co-partitioned
+        // at scale) — instead of the round's own unmaterialized cand
+        // frame, whose self-join re-derived the entire propagate
+        // subtree per round (the r16 plans show the duplicated
+        // pipeline + an extra cand-keyed exchange and two sorts). The
+        // stale jump still halves paths (any label IS a node id whose
+        // previous label is a valid, smaller reachable id); the
+        // one-hop part stays complete, so the fixpoint is identical —
+        // convergence detection is unchanged (a round with no change).
+        val j = labels.select(col("id").as("__jid"), col("label").as("__jlab"))
+        cand.join(j, col("cand") === col("__jid"), "left")
+          .select(col("id"),
+            least(col("cand"), coalesce(col("__jlab"), col("cand")))
+              .as("__fin"), col("label").as("__old"))
+          .select(col("id"), col("__fin").as("label"),
+            (col("__fin") < col("__old")).as("changed"))
+      }
+    } { (_, row) => row.getLong(0) == 0L }
     // the returned frame reads only the final label pin; the edge pin
-    // is dead once the loop exits (or, with maxIter rounds exhausted,
-    // once its last propagate join materialized in the final pin)
+    // is dead once the loop has converged
     Pins.release(edges)
-    (labelsPin.select(col("id").as("doc_id"), col("label").as("cluster_id")), it)
+    (labelsPin.select(col("id").as("doc_id"), col("label").as("cluster_id")), rounds)
   }
 
   /** APPLY a near-dup clustering as an actual corpus dedup: keep each

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Link-graph importance scoring (H28) — the PageRank-family quality
@@ -86,14 +86,12 @@ object Graphs {
     // setup is now exactly two edge materializations (measure, layout).
     // The positive-weight validation rides the same pass as an observe
     // metric instead of its own full-scan probe job.
-    val (e, eMetrics) = Pins.pinByWith(e0, Seq("src"), laid =>
+    val (e, observed) = Pins.pinByWith(e0, Seq("src"), laid =>
       laid.withColumn("total_w", sum(col("w")).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
         .observe("pr_weight_check",
           count(when(col("w") <= 0, lit(1))).as("n_bad")))
-    require(weight.isEmpty ||
-      eMetrics.get("pr_weight_check").map(_.getLong(0) == 0L)
-        .getOrElse(e.filter(col("w") <= 0).isEmpty),
+    require(weight.isEmpty || observed("pr_weight_check").getLong(0) == 0L,
       s"edge weights must be positive (column ${weight.orNull})")
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
@@ -156,7 +154,8 @@ object Graphs {
     * node labelled with the smallest node id reachable from it. This
     * IS the dedup-cluster machinery ([[graft.operators.Dedup.clusters]]:
     * seeded min-label propagation with path-halving pointer jumps,
-    * per-iteration lineage cuts, limit(1) convergence probe) exposed
+    * per-iteration lineage cuts, the changed-row count observed on each
+    * pin, a named error past `maxIter`) exposed
     * as a first-class graph surface — the near-dup graph is just one
     * of its inputs (entity resolution, account linking, and corpus
     * cluster analysis are the others). Iterations = O(log diameter);
@@ -594,8 +593,9 @@ object Graphs {
     * depth, so an oracle can unroll MORE rounds than convergence needs
     * (extras are no-ops, the h18/l8 discipline) and match digit for
     * digit. Convergence is also an acyclicity CANARY: on a cycle the
-    * relaxation never converges, so the loud `require` doubles as a
-    * cross-check that [[scc]] really extracted every cycle.
+    * relaxation never converges, so its named non-convergence error
+    * doubles as a cross-check that [[scc]] really extracted every
+    * cycle.
     *
     * Scale shape: one [[scc]] call, two node-keyed label joins to
     * relabel edges, a distinct, then per relaxation round one
@@ -671,8 +671,8 @@ object Graphs {
     }
     val cnodes = m.select(col("scc_id").as("cnode")).distinct()
     // levels only INCREASE (monotone longest-path relaxation), so the
-    // level sum is the convergence witness — same two-rounds-per-
-    // pin+probe job-count discipline as the scc label loops
+    // level sum is the convergence witness, observed on each pin — two
+    // relaxation steps per pinned round, the scc label loops' discipline
     def relax(cur: DataFrame): DataFrame = {
       val prop = ce
         .join(cur.select(col("cnode").as("src"), col("level").as("__sl")), "src")
@@ -682,28 +682,12 @@ object Graphs {
         .select(col("cnode"),
           greatest(col("level"), coalesce(col("__pl"), col("level"))).as("level"))
     }
-    def levelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("level").cast("decimal(38,0)")).as("s"))
-        .head().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var lev = Pins.pin(cnodes.withColumn("level", lit(0L)))
-    var levPin = lev
-    var prevSum = levelSum(lev)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      it += 2
-      val next = Pins.pin(relax(relax(lev)))
-      val s = levelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      Pins.release(levPin)
-      levPin = next
-      lev = next
-    }
-    require(converged,
-      s"condense level relaxation did not converge within $maxIter rounds — " +
-        "either raise maxIter or (if rounds exceed the graph's DAG depth) " +
-        "the SCC extraction left a cycle")
+    // a loop still relaxing after maxIter rounds means either too small
+    // a maxIter or (past the DAG depth) a cycle scc left behind
+    val (lev, _) = Pins.iterate("condense level relaxation (2 steps per round)",
+        cnodes.withColumn("level", lit(0L)), (maxIter + 1) / 2,
+        sum(col("level").cast("decimal(38,0)")).as("s"))(
+      cur => relax(relax(cur)))(witnessFrozen)
     // the returned frame reads the scc-map pin and the final level pin;
     // the condensed-edge pin is dead once levels converge
     Pins.release(ce)
@@ -785,6 +769,14 @@ object Graphs {
       .toDF("node", "scc_id")
   }
 
+  /** The convergence rule of the monotone sum-witness loops ([[condense]]
+    * and the scc label fixpoints): the witness row — sums of a per-node
+    * value that only ever moves one way — is unchanged from the previous
+    * pin's. Never holds on the seed; the null sums of an empty frame
+    * compare equal. */
+  private def witnessFrozen(prev: Option[Row], row: Row): Boolean =
+    prev.contains(row)
+
   /** Min-PRIORITY-label propagation to fixpoint over a directed edge
     * frame — `label(dst) := min(label(dst), label(src))` per round plus
     * the pointer jump, seeded `label(v) = (pr(v), v)`; the shared inner
@@ -842,51 +834,17 @@ object Graphs {
     // labels only DECREASE lexicographically, so each component sum is
     // a convergence witness: lab_p is per-node non-increasing; if
     // sum(lab_p) froze then every lab_p froze, and lab_n is then
-    // per-node non-increasing too — both sums frozen ⟺ fixpoint. One
-    // two-column aggregate per check instead of a changed-flag filter
-    // probe; TWO rounds per pin+check halves the driver-side job count
-    // (the dominant cost at small graph sizes) at the price of at most
-    // one no-op extra round
-    def labelSums(df: DataFrame): (java.math.BigDecimal, java.math.BigDecimal) = {
-      val r = df.agg(sum(col("lab_p").cast("decimal(38,0)")).as("sp"),
-        sum(col("lab_n").cast("decimal(38,0)")).as("sn")).head()
-      (Option(r.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO),
-       Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-    }
-    // the sums ride each pin as observe metrics (r17) — the standalone
-    // two-column aggregate cost its own job per check; labelSums stays
-    // as the no-metrics fallback
-    def sumsExprs = Seq(sum(col("lab_p").cast("decimal(38,0)")).as("sp"),
-      sum(col("lab_n").cast("decimal(38,0)")).as("sn"))
-    def sumsOf(df: DataFrame, row: Option[org.apache.spark.sql.Row])
-        : (java.math.BigDecimal, java.math.BigDecimal) = row match {
-      case Some(r) =>
-        (Option(r.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO),
-         Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-      case None => labelSums(df)
-    }
-    val (lab0, m0) = Pins.pinObserved(nodes.select(col("node"), col("pr"),
-      col("pr").as("lab_p"), col("node").as("lab_n")),
-      "scc2_sums_seed", sumsExprs: _*)
-    var lab = lab0
-    var labPin = lab
-    var prevSums = sumsOf(lab, m0)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      it += 2
-      val (next, m) = Pins.pinObserved(step(step(lab)),
-        s"scc2_sums_$it", sumsExprs: _*)
-      val s = sumsOf(next, m)
-      converged = s._1.compareTo(prevSums._1) == 0 &&
-        s._2.compareTo(prevSums._2) == 0
-      prevSums = s
-      Pins.release(labPin)
-      labPin = next
-      lab = next
-    }
-    require(converged, s"scc $what did not converge within $maxIter rounds")
-    lab
+    // per-node non-increasing too — both sums frozen ⟺ fixpoint. The
+    // two-column aggregate rides each pin's pass (r17); TWO rounds per
+    // pin halve the driver-side job count (the dominant cost at small
+    // graph sizes) at the price of at most one no-op extra round
+    Pins.iterate(s"scc $what (2 steps per round)",
+        nodes.select(col("node"), col("pr"),
+          col("pr").as("lab_p"), col("node").as("lab_n")),
+        (maxIter + 1) / 2,
+        sum(col("lab_p").cast("decimal(38,0)")).as("sp"),
+        sum(col("lab_n").cast("decimal(38,0)")).as("sn"))(
+      cur => step(step(cur)))(witnessFrozen)._1
   }
 
   /** The id-pivot spelling of [[minLabelFixpoint]]: single-long labels
@@ -912,37 +870,12 @@ object Graphs {
         .select(col("node"),
           least(col("cand"), coalesce(col("__jl"), col("cand"))).as("label"))
     }
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("label").cast("decimal(38,0)")).as("s"))
-        .head().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    // sum rides each pin as an observe metric (r17); labelSum is the
-    // no-metrics fallback
-    def sumOf(df: DataFrame, row: Option[org.apache.spark.sql.Row])
-        : java.math.BigDecimal = row match {
-      case Some(r) =>
-        Option(r.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-      case None => labelSum(df)
-    }
-    val (lab0, m0) = Pins.pinObserved(
-      nodes.select(col("node"), col("node").as("label")),
-      "scc1_sum_seed", sum(col("label").cast("decimal(38,0)")).as("s"))
-    var lab = lab0
-    var labPin = lab
-    var prevSum = sumOf(lab, m0)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      it += 2
-      val (next, m) = Pins.pinObserved(step(step(lab)),
-        s"scc1_sum_$it", sum(col("label").cast("decimal(38,0)")).as("s"))
-      val s = sumOf(next, m)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      Pins.release(labPin)
-      labPin = next
-      lab = next
-    }
-    require(converged, s"scc $what did not converge within $maxIter rounds")
+    // the label sum is the witness (labels only decrease), observed on
+    // each pin's pass
+    val (lab, _) = Pins.iterate(s"scc $what (2 steps per round)",
+        nodes.select(col("node"), col("node").as("label")), (maxIter + 1) / 2,
+        sum(col("label").cast("decimal(38,0)")).as("s"))(
+      cur => step(step(cur)))(witnessFrozen)
     // widen to the shared contract; the result frame READS the final
     // label pin (a projection over it), which the caller releases
     lab.select(col("node"), col("node").as("pr"),
@@ -994,7 +927,7 @@ object Graphs {
     var frontier = dist.select("node")
     var frontierPin: DataFrame = null
     var d = 0
-    var done = seedN.map(_.getLong(0) == 0L).getOrElse(frontier.isEmpty)
+    var done = seedN.getLong(0) == 0L
     while (!done && d < maxDepth) {
       d += 1
       val (fresh, freshN) = Pins.pinObserved(e
@@ -1004,7 +937,7 @@ object Graphs {
         .withColumn("depth", lit(d.toLong)),
         s"bfs_fresh_$d", count(lit(1)).as("n"))
         // pinned: the union and the next round's join read it
-      done = freshN.map(_.getLong(0) == 0L).getOrElse(fresh.limit(1).isEmpty)
+      done = freshN.getLong(0) == 0L
       Pins.release(frontierPin) // last round's frontier — superseded
       frontierPin = fresh
       if (!done) {
@@ -1071,9 +1004,9 @@ object Graphs {
     * Scale shape: per round one map-combined degree count over the
     * surviving edge set + two semi-joins (edge-sized, key-partitioned)
     * — never all-pairs, never node-state beyond the degree agg; rounds
-    * are data-bounded (each prunes ≥ 1 node or stops) with the
-    * limit(1)-probe early exit and per-round lineage pins of the
-    * components machinery. Peeling is MONOTONE — once below k a node
+    * are data-bounded (each prunes ≥ 1 node or stops) with an early
+    * exit counted on each round's degree pin (an observed metric) and
+    * per-round lineage pins of the components machinery. Peeling is MONOTONE — once below k a node
     * can never come back, so dropping is safe-by-construction and a
     * fixpoint pass is idempotent (the oracle unrolls MORE rounds than
     * convergence needs; the extras are no-ops, the h18 discipline). */
@@ -1107,8 +1040,7 @@ object Graphs {
         .join(keep.withColumnRenamed("n", "lo"), Seq("lo"), "left_semi")
         .join(keep.withColumnRenamed("n", "hi"), Seq("hi"), "left_semi")
         .select(col("lo"), col("hi")))
-      done = below.map(_.getLong(0) == 0L)
-        .getOrElse(degPin.filter(col("deg") < k).limit(1).isEmpty)
+      done = below.getLong(0) == 0L
       Pins.release(e, degPin) // superseded — pruned is materialized
       e = pruned
     }
@@ -1244,31 +1176,25 @@ object Graphs {
     // a 1-row aggregate job + broadcast build per half-round for a
     // value the pin pass already summed; with the metric the total
     // lands in the projection as a LITERAL — same decimal arithmetic,
-    // bit-identical scores. The crossJoin spelling stays as the
-    // no-metrics fallback.
+    // bit-identical scores.
     var massSeq = 0
-    def massOf(contrib: DataFrame): (DataFrame, Option[Long]) = {
+    def massOf(contrib: DataFrame): (DataFrame, String) = {
       massSeq += 1
-      val (p, m) = Pins.pinObserved(contrib
+      val (p, r) = Pins.pinObserved(contrib
         .unionByName(nodes.select(col("node"), lit(0L).as("m")))
         .groupBy(col("node")).agg(sum(col("m")).as("m")),
         s"hits_total_$massSeq", sum(col("m")).as("t"))
-      (p, m.collect { case r if !r.isNullAt(0) => r.getLong(0) })
+      // a null total means the mass frame has no row (an empty graph):
+      // the projection then has nothing to divide and stays empty
+      (p, if (r.isNullAt(0)) "NULL" else s"${r.getLong(0)}L")
     }
-    def normalized(mass: DataFrame, total: Option[Long], c: String): DataFrame =
-      total match {
-        // the multiply runs in decimal(38,0): pre-norm mass is bounded
-        // by scale·N, so (mass·scale) can pass 2^63 on a big graph
-        // long before the normalized result (< scale) does
-        case Some(t) => mass.select(col("node"),
-          expr(s"CAST((CAST(m AS DECIMAL(38,0)) * ${scale}L)" +
-            s" div CAST(${t}L AS DECIMAL(38,0)) AS BIGINT)").as(c))
-        case None =>
-          mass.crossJoin(broadcast(mass.agg(sum(col("m")).as("__t"))))
-            .select(col("node"),
-              expr(s"CAST((CAST(m AS DECIMAL(38,0)) * ${scale}L)" +
-                s" div CAST(__t AS DECIMAL(38,0)) AS BIGINT)").as(c))
-      }
+    // the multiply runs in decimal(38,0): pre-norm mass is bounded by
+    // scale·N, so (mass·scale) can pass 2^63 on a big graph long before
+    // the normalized result (< scale) does
+    def normalized(mass: DataFrame, total: String, c: String): DataFrame =
+      mass.select(col("node"),
+        expr(s"CAST((CAST(m AS DECIMAL(38,0)) * ${scale}L)" +
+          s" div CAST($total AS DECIMAL(38,0)) AS BIGINT)").as(c))
     var hub = nodes.withColumn("hub", lit(scale))
     var auth: DataFrame = null
     var prevAMass: DataFrame = null

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage-pin discipline for the iterative operators (pageRank, HITS,
@@ -42,7 +42,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * and (b) setup pins whose last consumer has materialized, and they
   * DOCUMENT the pins the returned frame reads (those must outlive the
   * call; the caller releases them by unpersisting the returned frame's
-  * blocks or letting the session end). */
+  * blocks or letting the session end).
+  *
+  * Single-pin fixpoint loops (dedup clusters / connected components,
+  * the scc label fixpoints, condense's level relaxation) run on
+  * [[iterate]], which owns that release order, reads each round's
+  * convergence witness off the pin's own pass ([[pinObserved]]) and
+  * turns an exhausted round budget into a named error. A missing
+  * observed-metrics row is one named error too ([[observedRow]]):
+  * no caller keeps a second probe to fall back to. */
 object Pins {
   val ModeKey = "spark.graft.checkpointMode"
 
@@ -142,38 +150,14 @@ object Pins {
     * the size cannot be measured (reliable-mode pins), falls back to
     * the [[layoutPartitions]] cap. */
   def pinBy(df: DataFrame, cols: String*): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    // an input that IS already a pinned leaf (hits lays two copies of
-    // one pinned edge list) needs no first materialization — measuring
-    // it in place skips a full extra copy of the frame (r16 verdict:
-    // at 100 TB that copy is an edge-table-sized write). The caller
-    // owns that pin, so the laid path must not release it.
-    val (first, owned) = df.queryExecution.analyzed match {
-      case lr: LogicalRDD
-        if lr.rdd.getStorageLevel !=
-          org.apache.spark.storage.StorageLevel.NONE => (df, false)
-      case _ => (pin(df), true)
-    }
-    val target = df.sparkSession.conf
-      .getOption(TargetPartitionBytesKey).map(_.toLong)
-      .getOrElse(16L * 1024 * 1024)
-    val cap = layoutPartitions(df)
-    val n = measuredSize(first)
-      .map(b => ((b + target - 1) / target).min(BigInt(cap)).max(BigInt(1)).toInt)
-      .getOrElse(cap)
+    val (first, owned, n) = measure(df)
     // a frame that fits ONE layout partition gains nothing from a
     // dedicated layout pass: its measured-leaf stats already make every
     // join against it a broadcast/hash build, so the second exchange +
     // materialization would be pure overhead (measured: the small-edge
     // clusters/LPA consumers regressed 3-24% with an unconditional
     // second phase)
-    if (n <= 1) first
-    else {
-      val laid = pin(first.repartition(n, cols.map(col): _*)
-        .sortWithinPartitions(cols.map(col): _*))
-      if (owned) release(first)
-      laid
-    }
+    if (n <= 1) first else layOut(first, owned, n, cols, identity)._1
   }
 
   /** [[pin]] with a FREE probe riding the materialization (r17): the
@@ -191,15 +175,13 @@ object Pins {
     * `CollectMetrics` passes rows through unchanged and delegates
     * partitioning/ordering to its child, so the pinned data AND the
     * preserved layout are identical with or without the observation.
-    * Returns None for the row when the execution surfaced no metrics
-    * (defensive — callers keep their standalone probe as fallback, so a
-    * Spark behavior change degrades to the old cost, never to a wrong
-    * answer). */
-  def pinObserved(df: DataFrame, name: String, metrics: org.apache.spark.sql.Column*)
-      : (DataFrame, Option[org.apache.spark.sql.Row]) = {
-    val observed = df.observe(name, metrics.head, metrics.tail: _*)
-    val pinned = pin(observed)
-    (pinned, observed.queryExecution.observedMetrics.get(name))
+    * The row is read through [[observedRow]]: one that did not surface
+    * throws, naming the observation. */
+  def pinObserved(df: DataFrame, name: String, metrics: Column*)
+      : (DataFrame, Row) = {
+    val watched = df.observe(name, metrics.head, metrics.tail: _*)
+    val pinned = pin(watched)
+    (pinned, observedRow(watched, name))
   }
 
   /** [[pinBy]] with a post-layout transform FUSED into the layout
@@ -211,13 +193,24 @@ object Pins {
     * measure pin, layout pin, then `pin(laid.join(laid.groupBy(...)))`
     * to attach). Always lays out (no small-frame skip): the callers use
     * this exactly when a second materialization is mandatory anyway, so
-    * fusing is a strict win at every size. Returns any `observe`
-    * metrics `finish` attached (empty map when none) — same fallback
-    * contract as [[pinObserved]]. */
+    * fusing is a strict win at every size. Returns the laid pin and a
+    * lookup of the `observe` metrics `finish` attached, read through
+    * [[observedRow]]. */
   def pinByWith(df: DataFrame, cols: Seq[String],
-                finish: DataFrame => DataFrame)
-      : (DataFrame, Map[String, org.apache.spark.sql.Row]) = {
-    import org.apache.spark.sql.functions.col
+                finish: DataFrame => DataFrame): (DataFrame, String => Row) = {
+    val (first, owned, n) = measure(df)
+    layOut(first, owned, n, cols, finish)
+  }
+
+  /** The measure step [[pinBy]] and [[pinByWith]] share: the first
+    * materialization of `df`, whether this call owns it, and the layout
+    * partition count its measured size asks for. An input that IS
+    * already a pinned leaf (hits lays two copies of one pinned edge
+    * list) is measured in place — skipping a full extra copy of the
+    * frame (r16 verdict: at 100 TB that copy is an edge-table-sized
+    * write); the caller owns that pin, so the layout must not release
+    * it. */
+  private def measure(df: DataFrame): (DataFrame, Boolean, Int) = {
     val (first, owned) = df.queryExecution.analyzed match {
       case lr: LogicalRDD
         if lr.rdd.getStorageLevel !=
@@ -231,11 +224,67 @@ object Pins {
     val n = measuredSize(first)
       .map(b => ((b + target - 1) / target).min(BigInt(cap)).max(BigInt(1)).toInt)
       .getOrElse(cap)
+    (first, owned, n)
+  }
+
+  private def layOut(first: DataFrame, owned: Boolean, n: Int, cols: Seq[String],
+                     finish: DataFrame => DataFrame): (DataFrame, String => Row) = {
+    import org.apache.spark.sql.functions.col
     val finished = finish(first.repartition(n, cols.map(col): _*)
       .sortWithinPartitions(cols.map(col): _*))
     val laid = pin(finished)
     if (owned) release(first)
-    (laid, finished.queryExecution.observedMetrics)
+    (laid, observedRow(finished, _))
+  }
+
+  /** The row of the `Dataset.observe` metrics named `name` that `df`'s
+    * execution computed. A row that did not surface throws an
+    * `IllegalStateException` naming the observation and the call site
+    * that asked for it: there is no second probe to fall back to.
+    *
+    * Place the observation at the pinned plan's top, or under row
+    * filters and projections only: adaptive execution replaces a join
+    * that has an empty side with an empty relation, and an observation
+    * under that join leaves the executed plan with it (its metrics
+    * never surface). */
+  def observedRow(df: DataFrame, name: String): Row =
+    df.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(
+        s"observed metrics '$name' did not surface from its frame's " +
+          s"execution (read at ${callSite()})"))
+
+  /** A single-pin fixpoint loop: pins `seed`, then `step(current)` once
+    * per round, each pin with the `witness` aggregates observed on its
+    * own pass ([[pinObserved]]), and releases the superseded pin only
+    * after its successor has materialized. Stops as soon as
+    * `converged(previous witness row, this pin's row)` holds — checked
+    * on the seed too, with no previous row — and returns the final pin
+    * (the caller owns it) with the number of rounds stepped. A loop
+    * still unconverged after `maxIter` rounds releases its last pin
+    * and throws an `IllegalArgumentException` naming `name` and
+    * `maxIter`: never a partial result. Observations are named
+    * `name/seed`, `name/1`, `name/2`, …; each pin is its own query, so
+    * the names never meet in one plan. */
+  def iterate(name: String, seed: DataFrame, maxIter: Int, witness: Column*)
+             (step: DataFrame => DataFrame)
+             (converged: (Option[Row], Row) => Boolean): (DataFrame, Int) = {
+    var (cur, row) = pinObserved(seed, s"$name/seed", witness: _*)
+    var done = converged(None, row)
+    var rounds = 0
+    while (!done) {
+      if (rounds >= maxIter) {
+        release(cur)
+        throw new IllegalArgumentException(
+          s"$name did not converge within $maxIter rounds — raise maxIter")
+      }
+      rounds += 1
+      val (next, nextRow) = pinObserved(step(cur), s"$name/$rounds", witness: _*)
+      release(cur) // superseded: its successor has materialized
+      done = converged(Some(row), nextRow)
+      cur = next
+      row = nextRow
+    }
+    (cur, rounds)
   }
 
   /** Eager constant-depth lineage pin in the session-selected mode. */
@@ -243,16 +292,7 @@ object Pins {
     if (debugOn(df)) guard(df, "pin() input")
     val pinned =
       df.sparkSession.conf.getOption(ModeKey).getOrElse("local") match {
-        case "local" =>
-          // storage level is a probe knob while measuring (r16):
-          // MEMORY_AND_DISK (deserialized object arrays, the Spark
-          // default) vs MEMORY_AND_DISK_SER (compact bytes,
-          // shuffle-read-like streaming iteration)
-          df.sparkSession.conf.getOption("spark.graft.pins.storageLevel") match {
-            case Some(lvl) => df.localCheckpoint(true,
-              org.apache.spark.storage.StorageLevel.fromString(lvl))
-            case None => df.localCheckpoint()
-          }
+        case "local" => df.localCheckpoint()
         case "reliable" =>
           require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
             s"$ModeKey=reliable requires sparkContext.setCheckpointDir(...)")
@@ -326,17 +366,22 @@ object Pins {
           case lr: LogicalRDD =>
             if (debug &&
                 lr.rdd.getStorageLevel !=
-                  org.apache.spark.storage.StorageLevel.NONE) {
-              val site = Thread.currentThread().getStackTrace
-                .drop(2).find(e => !e.getClassName.endsWith("graft.operators.Pins$"))
-                .map(_.toString).getOrElse("(unknown site)")
+                  org.apache.spark.storage.StorageLevel.NONE)
               released.synchronized {
-                released.put(lr.rdd.id, s"released at $site")
+                released.put(lr.rdd.id, s"released at ${callSite()}")
               }
-            }
             lr.rdd.unpersist(blocking = false)
           case _ => ()
         }
       }
     }
+
+  /** The first stack frame outside this object and the Scala library
+    * (whose collection frames sit between a caller's closure and us):
+    * the operator or pipeline that called in. */
+  private def callSite(): String =
+    Thread.currentThread().getStackTrace.iterator.drop(1)
+      .find(e => !e.getClassName.startsWith("graft.operators.Pins") &&
+        !e.getClassName.startsWith("scala."))
+      .map(_.toString).getOrElse("(unknown site)")
 }

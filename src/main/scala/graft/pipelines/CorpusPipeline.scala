@@ -48,7 +48,8 @@ import org.apache.spark.sql.functions._
   * survivors of its pin and the accepted count of the accepted pin —
   * none of them runs an execution of its own; the corpus size is the
   * one figure read back, from the committed table. A metric that fails
-  * to surface throws, naming the cycle and the metric. Every pin the
+  * to surface throws, naming the metric and the line that read it
+  * ([[Pins.observedRow]]). Every pin the
   * cycle takes (the extract, exact-dedup, band, archive-probe,
   * cluster-label and accepted pins, and the write paths' own) is
   * released once its last consumer has materialized, so a long
@@ -107,7 +108,6 @@ object CorpusPipeline {
                minQuality: Double = 0.5, minBands: Int = 2,
                maxBucket: Int = 1000): CycleStats = {
     val spark = landing.sparkSession
-    val cycle = "CorpusPipeline.runCycle"
     val corp = corpus(spark, corpusPath, landing)
     val idx = bandIndex(spark, indexPath)
 
@@ -139,9 +139,7 @@ object CorpusPipeline {
       .filter(isNew)
       .select(landing.columns.map(col) :+ col("__curated"): _*)
     val fresh = Pins.pin(extract)
-    val extracted = Cycle.metrics(
-      extract.queryExecution.observedMetrics.get("corpus_fresh"), cycle,
-      "corpus_fresh")
+    val extracted = Pins.observedRow(extract, "corpus_fresh")
     val nLanding = extracted.getAs[Long]("n_landing")
     val nNew = extracted.getAs[Long]("n_new")
     val nCurated = extracted.getAs[Long]("n_curated")
@@ -166,8 +164,7 @@ object CorpusPipeline {
       .withColumnRenamed("__h", "text_hash"),
       "corpus_no_exact", count(lit(1)).as("n"))
     Pins.release(fresh)
-    val nExactRejected = nCurated -
-      Cycle.metrics(uniqueRow, cycle, "corpus_no_exact").getAs[Long]("n")
+    val nExactRejected = nCurated - uniqueRow.getAs[Long]("n")
 
     // sign + band the batch ONCE; the archive probe, the within-batch
     // pair run and the index commit all consume this one pass
@@ -197,8 +194,7 @@ object CorpusPipeline {
         "cluster_id"),
       "corpus_accepted", count(lit(1)).as("n"))
     Pins.release(noExact, clusters)
-    val nAccepted =
-      Cycle.metrics(acceptedRow, cycle, "corpus_accepted").getAs[Long]("n")
+    val nAccepted = acceptedRow.getAs[Long]("n")
     val nNearDupRejected = nNew - nQualityRejected - nExactRejected - nAccepted
 
     // 6. commit: keyed writes absorb replays; the index rows are the

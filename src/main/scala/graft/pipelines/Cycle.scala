@@ -1,25 +1,9 @@
 package graft.pipelines
 
-import org.apache.spark.sql.Row
-
-/** Helpers of the pipeline cycles: accounting read off their pins, and
-  * independent table writes run side by side. */
+/** Helper of the pipeline cycles: independent table writes run side by
+  * side. (Their accounting is read off their pins through
+  * [[graft.operators.Pins.observedRow]].) */
 private[graft] object Cycle {
-
-  /** The row of the `Dataset.observe` metrics named `name` that a pin's
-    * one pass computed (as [[graft.operators.Pins.pinObserved]] returns
-    * it). A row that did not surface throws, naming the cycle and the
-    * metrics: there is no second probe to fall back to.
-    *
-    * Place the observation at the pinned plan's top, or under row
-    * filters and projections only: adaptive execution replaces a join
-    * that has an empty side with an empty relation, and an observation
-    * under that join leaves the executed plan with it (its metrics
-    * never surface). */
-  def metrics(row: Option[Row], cycle: String, name: String): Row =
-    row.getOrElse(throw new IllegalStateException(
-      s"$cycle: observed metrics '$name' did not surface from its pin's " +
-        "execution"))
 
   /** Runs independent table writes side by side, on fresh threads, one
     * per write, created per call (no pool: a pooled thread would carry

@@ -170,8 +170,7 @@ object IotBatchPipeline {
     Warehouse.mergeUpsert(staged, stagePath, partitionCols = Seq("day"),
       key = Seq("event_id"), versionCol = cursorCol)
     Pins.release(staged)
-    val sliceMax = Option(Cycle.metrics(sliceRow, "IotBatchPipeline.runCycles",
-      "iot_slice").get(0)).map(_.asInstanceOf[java.sql.Timestamp])
+    val sliceMax = Option(sliceRow.get(0)).map(_.asInstanceOf[java.sql.Timestamp])
     (prevWm ++ sliceMax).reduceOption((a, b) => if (a.after(b)) a else b)
       .foreach(persistWatermark(spark, stagePath, _))
     // 3. agg: touched-period-only rollup refresh from stage, once per

@@ -188,11 +188,4 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(sameRows(table(corpusPath), table(s"$dir/ref_corpus")))
     assert(sameRows(table(indexPath), table(s"$dir/ref_index")))
   }
-
-  test("a pin whose observed metrics never surface fails naming the cycle and the metrics") {
-    val e = intercept[IllegalStateException](
-      graft.pipelines.Cycle.metrics(None, "SomeCycle", "some_metrics"))
-    assert(e.getMessage.contains("SomeCycle") &&
-      e.getMessage.contains("some_metrics"), e.getMessage)
-  }
 }

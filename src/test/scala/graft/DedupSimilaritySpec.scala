@@ -296,6 +296,16 @@ class DedupSpec extends SparkSpec {
       s"two-hop should need fewer iterations: $itTwo vs $itOne")
   }
 
+  test("clusters that have not converged within maxIter throw naming the loop, never partial labels") {
+    // one-hop propagation needs ~diameter rounds on the 10-node path;
+    // three rounds leave labels still changing
+    val pairs = (1L to 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException](
+      Dedup.clusters(pairs, "doc_a", "doc_b", maxIter = 3, twoHop = false))
+    assert(e.getMessage.contains("Dedup.clusters") && e.getMessage.contains("3 rounds"),
+      e.getMessage)
+  }
+
   test("embedding near-dup finds identical vectors within cluster") {
     val emb = Seq(
       (1L, Array(1.0, 0.0, 0.0), 0), (2L, Array(1.0, 0.0, 0.0), 0),

@@ -398,4 +398,26 @@ class EdgeCaseSpec extends SparkSpec {
     assert(graft.operators.Graphs.labelPropagation(noEdges, "src", "dst",
       iters = 2).count() == 0)
   }
+
+  test("every observed graph loop returns an empty frame on an empty edge table") {
+    // the loops read their convergence counts / totals off each pin's
+    // pass; on an empty graph those rows carry zero counts and NULL
+    // sums (hits' normalizer above all), which must still mean "empty
+    // result", never an error
+    val noEdges = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
+    val seeds = Seq(1L).toDF("node")
+    val results = Seq(
+      "hits" -> Graphs.hits(noEdges, "src", "dst", iters = 2),
+      "kcore" -> Graphs.kcore(noEdges, "src", "dst", k = 2),
+      "bfsDepth" -> Graphs.bfsDepth(noEdges, "src", "dst", seeds),
+      "weighted pageRank" -> Graphs.pageRank(noEdges, "src", "dst", iters = 2,
+        weight = Some("w")),
+      "connectedComponents" -> Graphs.connectedComponents(noEdges, "src", "dst"),
+      "scc" -> Graphs.scc(noEdges, "src", "dst", localThreshold = 0L),
+      "condense" -> Graphs.condense(noEdges, "src", "dst", localThreshold = 0L))
+    results.foreach { case (op, df) =>
+      assert(df.collect().isEmpty, s"$op on an empty graph")
+    }
+    graft.operators.Pins.release(results.map(_._2): _*)
+  }
 }

@@ -308,13 +308,13 @@ class PinsSpec extends SparkSpec {
       count(when(col("changed"), lit(1))).as("n_changed"),
       sum(col("v")).as("tot"))
     // the probe rode the pin pass — its values must equal the same
-    // aggregates computed the expensive way (a standalone action)
-    assert(row.isDefined, "localCheckpoint surfaced no observed metrics")
+    // aggregates computed the expensive way (a standalone action); a
+    // row that did not surface would have thrown inside pinObserved
     val direct = df.agg(
       count(when(col("changed"), lit(1))), sum(col("v"))).head()
-    assert(row.get.getLong(0) == direct.getLong(0) &&
-      row.get.getLong(1) == direct.getLong(1),
-      s"observed ${row.get} != direct $direct")
+    assert(row.getLong(0) == direct.getLong(0) &&
+      row.getLong(1) == direct.getLong(1),
+      s"observed $row != direct $direct")
     // CollectMetrics passes rows through: the pinned frame is the input
     assert(pinned.count() == 10000)
     assert(pinned.columns.toSeq == df.columns.toSeq)
@@ -332,8 +332,8 @@ class PinsSpec extends SparkSpec {
             org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
           .observe("wcheck", count(when(col("w") <= 0, lit(1))).as("bad")))
       // the observe() attached inside `finish` surfaces through the return
-      assert(metrics.get("wcheck").exists(_.getLong(0) == 0L),
-        s"expected wcheck metric, got $metrics")
+      val wcheck = metrics("wcheck")
+      assert(wcheck.getLong(0) == 0L, s"expected wcheck = 0, got $wcheck")
       // row set identical to the reference spelling (groupBy + join)
       val want = edges.join(
           edges.groupBy("src").agg(sum("w").as("total_w")), "src")
@@ -360,4 +360,79 @@ class PinsSpec extends SparkSpec {
       Pins.release(laid)
     } finally spark.conf.unset(Pins.TargetPartitionBytesKey)
   }
+
+  // ---- the fixpoint driver and the missing-metrics rule: one place for
+  // the contract every ported loop (dedup clusters, the scc label
+  // fixpoints, condense's relaxation) relies on
+
+  /** A countdown loop: each round lowers every positive `v` by one, and
+    * the witness counts the rows still positive. */
+  private def countdown(maxIter: Int, from: Long): (DataFrame, Int) = {
+    import org.apache.spark.sql.functions.{count, greatest, lit, when}
+    Pins.iterate("countdown", spark.range(0, 5).selectExpr(s"least(id, $from) as v").toDF(),
+        maxIter, count(when(col("v") > 0, lit(1))).as("n_pos"))(
+      cur => cur.select(greatest(col("v") - 1, lit(0L)).as("v")))(
+      (_, row) => row.getLong(0) == 0L)
+  }
+
+  test("iterate: a seed that has already converged takes 0 rounds and is the result") {
+    val before = pinnedIds
+    val (out, rounds) = countdown(maxIter = 3, from = 0L)
+    assert(rounds == 0)
+    assert(out.as[Long].collect().toSeq == Seq.fill(5)(0L))
+    assert(pinnedIds -- before == pinIds(out), "only the seed pin is retained")
+    Pins.release(out)
+    assert(pinnedIds == before)
+  }
+
+  test("iterate: after several rounds only the final pin is retained") {
+    val before = pinnedIds
+    val (out, rounds) = countdown(maxIter = 10, from = 4L)
+    // v = 0..4 needs four rounds to reach all-zero
+    assert(rounds == 4, s"rounds: $rounds")
+    assert(out.as[Long].collect().toSeq == Seq.fill(5)(0L))
+    val kept = pinnedIds -- before
+    assert(kept.size == 1 && kept == pinIds(out),
+      s"iterate must retain exactly its final pin, kept $kept")
+    Pins.release(out)
+    assert(pinnedIds == before)
+  }
+
+  test("iterate: a loop still unconverged after maxIter rounds throws naming the loop and maxIter") {
+    val before = pinnedIds
+    val e = intercept[IllegalArgumentException](countdown(maxIter = 2, from = 4L))
+    assert(e.getMessage.contains("countdown") && e.getMessage.contains("2 rounds"),
+      e.getMessage)
+    assert(pinnedIds == before, "a failed loop must not leave its last pin behind")
+  }
+
+  test("iterate: the convergence rule sees the previous witness row (None on the seed)") {
+    import org.apache.spark.sql.functions.{lit, sum}
+    // a witness that freezes: sum(v) stops moving once every v is 0
+    val seen = scala.collection.mutable.ArrayBuffer[Option[Long]]()
+    val (out, rounds) = Pins.iterate("frozen-sum",
+        spark.range(0, 3).selectExpr("id as v").toDF(), 10,
+        sum(col("v")).as("s"))(
+      cur => cur.selectExpr("greatest(v - 1, 0) as v"))(
+      (prev, row) => { seen += prev.map(_.getLong(0)); prev.contains(row) })
+    // sums 3, 1, 0, 0: frozen on the third round
+    assert(rounds == 3, s"rounds: $rounds")
+    assert(seen.toSeq == Seq(None, Some(3L), Some(1L), Some(0L)), s"seen: $seen")
+    Pins.release(out)
+  }
+
+  test("a pin whose observed metrics never surface fails naming the observation and its reader") {
+    // an executed frame that carries no such observation: the lookup
+    // must throw a named error, never hand back a row to fall back from
+    val df = spark.range(3).toDF("x")
+    df.collect()
+    val e = intercept[IllegalStateException](Pins.observedRow(df, "some_metrics"))
+    assert(e.getMessage.contains("PinsSpec") &&
+      e.getMessage.contains("some_metrics"), e.getMessage)
+  }
+
+  private def pinIds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
 }
