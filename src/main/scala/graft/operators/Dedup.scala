@@ -405,8 +405,10 @@ object Dedup {
       .agg(min(col("y")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("label"),
         (col("mn") < col("id")).as("changed"))
-    val (labelsPin, rounds) = Pins.iterate("Dedup.clusters", seed, maxIter,
-        count(when(col("changed"), lit(1))).as("n_changed")) { labels =>
+    val nChanged = count(when(col("changed"), lit(1))).as("n_changed")
+    val (labelsPin, _, rounds) = Pins.iterate("Dedup.clusters",
+        Pins.pinObserved(seed, "Dedup.clusters/seed", nChanged), maxIter,
+        nChanged) { labels =>
       // Delta propagation (r17, guide §2.3 "shuffle fewer bytes"): only
       // labels that CHANGED last round can lower a neighbor this round.
       // Exact, not approximate — an unchanged neighbor y has
@@ -452,7 +454,7 @@ object Dedup {
           .select(col("id"), col("__fin").as("label"),
             (col("__fin") < col("__old")).as("changed"))
       }
-    } { (_, row) => row.getLong(0) == 0L }
+    } { (_, row, _) => row.getLong(0) == 0L }
     // the returned frame reads only the final label pin; the edge pin
     // is dead once the loop has converged
     Pins.release(edges)

@@ -431,10 +431,14 @@ object Graphs {
     * (trim), one edge⋈label join + grouped min + label-sized self-join
     * (color/extract rounds), two label joins to class-filter edges;
     * never all-pairs (the closure the oracle materializes is exactly
-    * what the ENGINE must avoid: it is O(n²) on a dense core). Loop
-    * counts are data-bounded with monotone sum/count probes and loud
-    * `require`s on exhaustion; per-round frames pin and release through
-    * [[Pins]] (constant-depth lineage, no storage leak). Outer rounds
+    * what the ENGINE must avoid: it is O(n²) on a dense core). The trim
+    * and the label fixpoints run on [[Pins.iterate]], one pin per round
+    * with its monotone count/sum witness observed on that pin's pass;
+    * the outer loop reads its remaining-edge count off the pins it
+    * takes, so no loop starts a probe job of its own. Label fixpoints
+    * and the outer loop fail loudly on exhaustion; per-round frames pin
+    * and release through [[Pins]] (constant-depth lineage, no storage
+    * leak). Outer rounds
     * with HASHED pivots are O(log n) in expectation on EVERY graph
     * (≈1.6·log₂ n measured on the adversarial chain-of-SCCs shape that
     * took one round per layer under min-ID pivots — the r14 verdict's
@@ -459,9 +463,11 @@ object Graphs {
           localThreshold: Long = 100000L): DataFrame = {
     require(maxOuter >= 1, s"maxOuter must be >= 1, got $maxOuter")
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    val e0p = Pins.pin(edges
+    // the edge count the fast-path check reads rides the edge pin's pass
+    val nEdges = count(lit(1)).as("n")
+    val (e0, e0Row) = Pins.pinObserved(edges
       .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-      .distinct())
+      .distinct(), "scc edges", nEdges)
     // SMALL-GRAPH FAST PATH: below `localThreshold` edges the graph
     // fits comfortably in one task, and the distributed rounds' cost
     // is pure scheduling (~120 tiny stages at the gated sizes) — run a
@@ -470,54 +476,47 @@ object Graphs {
     // executor-side, never a driver collect; the broadcast-threshold
     // philosophy applied to graph shape). `localThreshold = 0` forces
     // the distributed path — the specs pin both paths row-identical.
-    if (localThreshold > 0 && e0p.count() <= localThreshold)
-      return sccLocal(e0p) // reads the e0 pin — it outlives the call
-    val e0 = e0p
+    if (localThreshold > 0 && e0Row.getLong(0) <= localThreshold)
+      return sccLocal(e0) // reads the e0 pin — it outlives the call
     val allNodes = Pins.pin(e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct())
-    // self-loops don't affect SCC membership — drop before iterating
-    var rem = Pins.pin(e0.filter(col("src") =!= col("dst")))
-    Pins.release(e0p) // its consumers (allNodes, rem) are pinned
+    // self-loops don't affect SCC membership — drop before iterating.
+    // Every remaining-edge pin carries its edge count: the trim's
+    // witness and the outer loop's emptiness test
+    var (rem, remRow) = Pins.pinObserved(e0.filter(col("src") =!= col("dst")),
+      "scc remaining/0", nEdges)
+    Pins.release(e0) // its consumers (allNodes, rem) are pinned
+    // one peel: drop edges touching a node lacking in- or out-edges
+    def peel(cur: DataFrame): DataFrame = {
+      val keep = cur.select(col("src").as("n")).distinct()
+        .join(cur.select(col("dst").as("n")).distinct(), Seq("n"), "left_semi")
+      cur
+        .join(keep.withColumnRenamed("n", "src"), Seq("src"), "left_semi")
+        .join(keep.withColumnRenamed("n", "dst"), Seq("dst"), "left_semi")
+    }
     var extracted: DataFrame = null
     var outer = 0
-    var remEmpty = rem.isEmpty
-    while (!remEmpty && outer < maxOuter) {
+    while (remRow.getLong(0) > 0L && outer < maxOuter) {
       outer += 1
-      // ---- trim to fixpoint ----
-      // one peel: drop edges touching a node lacking in- or out-edges.
-      // Peeling only REMOVES edges, so "the edge count stopped moving"
-      // is the fixpoint test — two peels per pin+count halves the
-      // driver job count (tiny frames, fixed per-job scheduling cost)
-      // at the price of at most one no-op extra peel
-      def peel(cur: DataFrame): DataFrame = {
-        val keep = cur.select(col("src").as("n")).distinct()
-          .join(cur.select(col("dst").as("n")).distinct(), Seq("n"), "left_semi")
-        cur
-          .join(keep.withColumnRenamed("n", "src"), Seq("src"), "left_semi")
-          .join(keep.withColumnRenamed("n", "dst"), Seq("dst"), "left_semi")
-      }
+      // ---- bounded trim ----
       // trim is an OPTIMIZATION, not a correctness requirement: coloring
       // extracts whatever a bounded trim leaves behind (singletons are
-      // their own class roots), so trim runs a FIXED number of peels per
-      // outer round instead of to a loudly-required fixpoint — the old
-      // to-fixpoint loop was itself O(diameter) rounds on a long path
-      // (each peel removes one edge per end), the same adversarial shape
-      // the hash pivots de-correlate. 16 peels eat the shallow DAG bulk
-      // real graphs carry; anything deeper is the coloring's job.
-      var remCount = rem.count()
-      var trimmed = false
-      var tIt = 0
-      while (!trimmed && tIt < 16) {
-        tIt += 2
-        val pruned = Pins.pin(peel(peel(rem)))
-        val c = pruned.count()
-        trimmed = c == remCount
-        remCount = c
-        Pins.release(rem)
-        rem = pruned
-      }
-      remEmpty = rem.isEmpty
-      if (!remEmpty) {
+      // their own class roots), so trim runs at most 16 peels per outer
+      // round and stops silently there — a to-fixpoint trim is itself
+      // O(diameter) rounds on a long path (each peel removes one edge
+      // per end), the same adversarial shape the hash pivots
+      // de-correlate. 16 peels eat the shallow DAG bulk real graphs
+      // carry; anything deeper is the coloring's job. Peeling only
+      // REMOVES edges, so "the edge count stopped moving" is the
+      // fixpoint test; two peels per pin halve the job count (tiny
+      // frames, fixed per-job scheduling cost) at the price of at most
+      // one no-op extra peel.
+      val (trimmed, trimmedRow, _) = Pins.iterate(s"scc trim/$outer",
+          (rem, remRow), 8, nEdges)(cur => peel(peel(cur)))(
+        (prev, row, round) => prev.contains(row) || round == 8)
+      rem = trimmed
+      remRow = trimmedRow
+      if (remRow.getLong(0) > 0L) {
         // hashed pivot priorities (see minLabelFixpoint): xxhash64
         // breaks the id/topology correlation, the node id tiebreak
         // keeps priorities unique so collisions cannot merge classes
@@ -555,16 +554,17 @@ object Graphs {
           .select(col("node"), col("scc_id")))
         val acc = Pins.pin(
           if (extracted == null) members else extracted.unionByName(members))
-        val newRem = Pins.pin(rem
+        val (newRem, newRemRow) = Pins.pinObserved(rem
           .join(members.select(col("node").as("src")), Seq("src"), "left_anti")
-          .join(members.select(col("node").as("dst")), Seq("dst"), "left_anti"))
+          .join(members.select(col("node").as("dst")), Seq("dst"), "left_anti"),
+          s"scc remaining/$outer", nEdges)
         Pins.release(rem, ns, color, ce, blab, memb0, members, extracted)
         extracted = acc
         rem = newRem
-        remEmpty = rem.isEmpty
+        remRow = newRemRow
       }
     }
-    require(remEmpty,
+    require(remRow.getLong(0) == 0L,
       s"scc did not converge within $maxOuter outer rounds — raise maxOuter")
     Pins.release(rem)
     // the returned frame reads the allNodes pin and the extracted pin
@@ -614,17 +614,18 @@ object Graphs {
     val sccFrame = scc(edges, src, dst, maxOuter, maxIter, localThreshold)
     val m = Pins.pin(sccFrame)
     Pins.release(sccFrame)
-    val ce = Pins.pin(e0
+    // the condensed-edge count the fast-path check reads rides the pin
+    val (ce, ceRow) = Pins.pinObserved(e0
       .join(m.select(col("node").as("src"), col("scc_id").as("__ca")), "src")
       .join(m.select(col("node").as("dst"), col("scc_id").as("__cb")), "dst")
       .filter(col("__ca") =!= col("__cb"))
       .select(col("__ca").as("src"), col("__cb").as("dst"))
-      .distinct())
+      .distinct(), "condense edges", count(lit(1)).as("n"))
     // SMALL-CONDENSATION FAST PATH (the scc localThreshold contract):
     // the relaxation's cost at small sizes is per-round scheduling, so
     // run the longest-path levels in ONE task — still executor-side,
     // deterministic, and spec-pinned equal to the distributed rounds
-    if (localThreshold > 0 && ce.count() <= localThreshold) {
+    if (localThreshold > 0 && ceRow.getLong(0) <= localThreshold) {
       val spark = ce.sparkSession
       import spark.implicits._
       val local = ce.select(col("src"), col("dst")).as[(Long, Long)]
@@ -682,12 +683,13 @@ object Graphs {
         .select(col("cnode"),
           greatest(col("level"), coalesce(col("__pl"), col("level"))).as("level"))
     }
-    // a loop still relaxing after maxIter rounds means either too small
+    // a loop still relaxing after maxIter steps means either too small
     // a maxIter or (past the DAG depth) a cycle scc left behind
-    val (lev, _) = Pins.iterate("condense level relaxation (2 steps per round)",
-        cnodes.withColumn("level", lit(0L)), (maxIter + 1) / 2,
-        sum(col("level").cast("decimal(38,0)")).as("s"))(
-      cur => relax(relax(cur)))(witnessFrozen)
+    val name = s"condense level relaxation (maxIter = $maxIter steps, 2 per round)"
+    val levelSum = sum(col("level").cast("decimal(38,0)")).as("s")
+    val (lev, _, _) = Pins.iterate(name, Pins.pinObserved(
+        cnodes.withColumn("level", lit(0L)), s"$name/seed", levelSum),
+        (maxIter + 1) / 2, levelSum)(cur => relax(relax(cur)))(witnessFrozen)
     // the returned frame reads the scc-map pin and the final level pin;
     // the condensed-edge pin is dead once levels converge
     Pins.release(ce)
@@ -774,7 +776,7 @@ object Graphs {
     * value that only ever moves one way — is unchanged from the previous
     * pin's. Never holds on the seed; the null sums of an empty frame
     * compare equal. */
-  private def witnessFrozen(prev: Option[Row], row: Row): Boolean =
+  private def witnessFrozen(prev: Option[Row], row: Row, round: Int): Boolean =
     prev.contains(row)
 
   /** Min-PRIORITY-label propagation to fixpoint over a directed edge
@@ -838,13 +840,12 @@ object Graphs {
     // two-column aggregate rides each pin's pass (r17); TWO rounds per
     // pin halve the driver-side job count (the dominant cost at small
     // graph sizes) at the price of at most one no-op extra round
-    Pins.iterate(s"scc $what (2 steps per round)",
-        nodes.select(col("node"), col("pr"),
-          col("pr").as("lab_p"), col("node").as("lab_n")),
-        (maxIter + 1) / 2,
-        sum(col("lab_p").cast("decimal(38,0)")).as("sp"),
-        sum(col("lab_n").cast("decimal(38,0)")).as("sn"))(
-      cur => step(step(cur)))(witnessFrozen)._1
+    val name = s"scc $what (maxIter = $maxIter steps, 2 per round)"
+    val labSums = Seq(sum(col("lab_p").cast("decimal(38,0)")).as("sp"),
+      sum(col("lab_n").cast("decimal(38,0)")).as("sn"))
+    Pins.iterate(name, Pins.pinObserved(nodes.select(col("node"), col("pr"),
+          col("pr").as("lab_p"), col("node").as("lab_n")), s"$name/seed", labSums: _*),
+        (maxIter + 1) / 2, labSums: _*)(cur => step(step(cur)))(witnessFrozen)._1
   }
 
   /** The id-pivot spelling of [[minLabelFixpoint]]: single-long labels
@@ -872,10 +873,11 @@ object Graphs {
     }
     // the label sum is the witness (labels only decrease), observed on
     // each pin's pass
-    val (lab, _) = Pins.iterate(s"scc $what (2 steps per round)",
-        nodes.select(col("node"), col("node").as("label")), (maxIter + 1) / 2,
-        sum(col("label").cast("decimal(38,0)")).as("s"))(
-      cur => step(step(cur)))(witnessFrozen)
+    val name = s"scc $what (maxIter = $maxIter steps, 2 per round)"
+    val labelSum = sum(col("label").cast("decimal(38,0)")).as("s")
+    val (lab, _, _) = Pins.iterate(name, Pins.pinObserved(
+        nodes.select(col("node"), col("node").as("label")), s"$name/seed", labelSum),
+        (maxIter + 1) / 2, labelSum)(cur => step(step(cur)))(witnessFrozen)
     // widen to the shared contract; the result frame READS the final
     // label pin (a projection over it), which the caller releases
     lab.select(col("node"), col("node").as("pr"),
@@ -891,13 +893,15 @@ object Graphs {
     * emitting every node forces a full node join for rows that carry
     * no signal. Seeds not present in the graph contribute nothing.
     *
-    * Frontier BFS, the monotone min-relaxation: per round ONE
-    * src-keyed edge⋈frontier join (edges hash-partitioned on src ONCE
-    * and pinned — every round reuses the co-partitioning), a distinct,
-    * and an anti-join against the settled set; the frontier only
-    * shrinks mass-wise and the loop exits early on an empty round
-    * (aggregate-sized probe). Settled distances re-pin per round —
-    * node-sized, constant-depth lineage. Depths are exact by
+    * Frontier BFS, the monotone min-relaxation on [[Pins.iterate]]: per
+    * round ONE src-keyed edge⋈frontier join (edges hash-partitioned on
+    * src ONCE and pinned — every round reuses the co-partitioning), a
+    * distinct, and an anti-join against the settled set. The settled
+    * set is the round's ONE pin — node-sized, constant-depth lineage —
+    * and its rows settled this round (a flag column) are the next
+    * frontier; their count, observed on the pin's pass, ends the loop
+    * on an empty round, and round `maxDepth` ends it too. Depths are
+    * exact by
     * induction: a node first reached in round d has a d-hop path and,
     * by the frontier construction, no shorter one — so the unrolled
     * oracle (min over per-round candidate unions, the h18 discipline)
@@ -916,43 +920,27 @@ object Graphs {
       .select(col("node").cast("long").as("node")).distinct()
     val inGraph = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    // the empty-frontier probes ride each pin as observe row counts
-    // (r17) — the standalone limit(1) probe cost its own job per round
-    val (dist0, seedN) = Pins.pinObserved(
-      inGraph.join(s0, Seq("node"), "left_semi")
-        .withColumn("depth", lit(0L)),
-      "bfs_seed", count(lit(1)).as("n"))
-    var dist = dist0
-    var distPin = dist
-    var frontier = dist.select("node")
-    var frontierPin: DataFrame = null
-    var d = 0
-    var done = seedN.getLong(0) == 0L
-    while (!done && d < maxDepth) {
-      d += 1
-      val (fresh, freshN) = Pins.pinObserved(e
-        .join(frontier.select(col("node").as("src")), Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .withColumn("depth", lit(d.toLong)),
-        s"bfs_fresh_$d", count(lit(1)).as("n"))
-        // pinned: the union and the next round's join read it
-      done = freshN.getLong(0) == 0L
-      Pins.release(frontierPin) // last round's frontier — superseded
-      frontierPin = fresh
-      if (!done) {
-        val nd = Pins.pin(dist.unionByName(fresh))
-        Pins.release(distPin) // superseded settled-set pin
-        distPin = nd
-        dist = nd
-        frontier = fresh.select("node")
-      }
-    }
-    // the final frontier pin's rows already live in the dist pin (or it
-    // was the empty convergence round); the edge pin has no consumer in
-    // the returned frame — only the final dist pin must outlive the call
-    Pins.release(e, frontierPin)
-    dist
+    // one settled-set pin per round: `__new` flags the rows the round
+    // settled — the next round's frontier — and their count, observed
+    // on the pin's pass, is the witness: an empty frontier converges,
+    // and so does the maxDepth-th round
+    val nNew = count(when(col("__new"), lit(1))).as("n_new")
+    val (dist, _, _) = Pins.iterate("bfsDepth", Pins.pinObserved(
+        inGraph.join(s0, Seq("node"), "left_semi")
+          .select(col("node"), lit(0L).as("depth"), lit(true).as("__new")),
+        "bfsDepth/seed", nNew), maxDepth, nNew) { settled =>
+      val fresh = e
+        .join(settled.filter(col("__new"))
+          .select(col("node").as("src"), (col("depth") + 1L).as("depth")), Seq("src"))
+        .select(col("dst").as("node"), col("depth")).distinct()
+        .join(settled, Seq("node"), "left_anti")
+      settled.select(col("node"), col("depth"), lit(false).as("__new"))
+        .unionByName(fresh.withColumn("__new", lit(true)))
+    } ((_, row, round) => row.getLong(0) == 0L || round == maxDepth)
+    // the edge pin has no consumer in the returned frame — only the
+    // final settled-set pin must outlive the call
+    Pins.release(e)
+    dist.select(col("node"), col("depth"))
   }
 
   /** Neighborhood Jaccard similarity (L7) — structural "similar items":
@@ -1003,10 +991,12 @@ object Graphs {
     *
     * Scale shape: per round one map-combined degree count over the
     * surviving edge set + two semi-joins (edge-sized, key-partitioned)
-    * — never all-pairs, never node-state beyond the degree agg; rounds
-    * are data-bounded (each prunes ≥ 1 node or stops) with an early
-    * exit counted on each round's degree pin (an observed metric) and
-    * per-round lineage pins of the components machinery. Peeling is MONOTONE — once below k a node
+    * — never all-pairs, never node-state beyond the degree agg. The
+    * loop runs on [[Pins.iterate]] with ONE pin per round, the
+    * surviving edges, whose edge count (observed on the pin's pass) is
+    * the witness: rounds are data-bounded (each prunes ≥ 1 node or
+    * stops), and the first round that removes no edge confirms the
+    * fixpoint. Peeling is MONOTONE — once below k a node
     * can never come back, so dropping is safe-by-construction and a
     * fixpoint pass is idempotent (the oracle unrolls MORE rounds than
     * convergence needs; the extras are no-ops, the h18 discipline). */
@@ -1014,40 +1004,40 @@ object Graphs {
             maxIter: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    // laid out by "lo" once (r16): the first per-round semi-join is
-    // then co-partitioned; the survivor set pins each round so BOTH
-    // semi-joins see a MEASURED node-sized build side (broadcast-hash
-    // locally — zero edge exchanges per peel; explicit layout at scale)
-    var e = Pins.pinBy(edges
+    // laid out by "lo" once (r16): the per-round semi-join on "lo" is
+    // then co-partitioned. The edge count, observed on the layout pass,
+    // is the seed's witness: an empty graph takes no round
+    val nEdges = count(lit(1)).as("n")
+    val canon = edges
       .select(col(src).cast("long").as("a"), col(dst).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("lo"),
         greatest(col("a"), col("b")).as("hi"))
-      .distinct(), "lo")
-    var it = 0
-    var done = e.isEmpty
-    while (!done && it < maxIter) {
-      it += 1
-      val deg = e.select(col("lo").as("n")).union(e.select(col("hi").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("deg"))
-      // convergence probe (any node below k this round?) rides the
-      // degree pin as an observe metric (r17) — the standalone
-      // filter+limit probe cost its own job per peel
-      val (degPin, below) = Pins.pinObserved(deg, s"kcore_below_$it",
-        count(when(col("deg") < k, lit(1))).as("n_below"))
-      val keep = degPin.filter(col("deg") >= k).select(col("n"))
-      val pruned = Pins.pin(e
-        .join(keep.withColumnRenamed("n", "lo"), Seq("lo"), "left_semi")
-        .join(keep.withColumnRenamed("n", "hi"), Seq("hi"), "left_semi")
-        .select(col("lo"), col("hi")))
-      done = below.getLong(0) == 0L
-      Pins.release(e, degPin) // superseded — pruned is materialized
-      e = pruned
-    }
-    require(done || e.select(col("lo").as("n")).union(e.select(col("hi").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < k).limit(1).isEmpty,
-      s"k-core did not converge within $maxIter rounds (k=$k) — raise maxIter")
+      .distinct()
+      .observe("k-core/seed", nEdges)
+    val seed = Pins.pinBy(canon, "lo")
+    // one edge pin per peel, the degrees computed inside the step. A
+    // peel that removes no edge confirms the fixpoint, so `maxIter`
+    // productive peels get one confirming round on top — the budget that
+    // returns a core settling in exactly `maxIter` peels and throws on
+    // one that needs more.
+    val (e, _, _) = Pins.iterate(
+        s"k-core (k = $k, maxIter = $maxIter peels + 1 confirming round)",
+        (seed, Pins.observedRow(canon, "k-core/seed")), maxIter + 1, nEdges) { cur =>
+      // each edge as its two endpoint rows, which ONE degree aggregate
+      // and ONE semi-join read (two semi-joins would each re-derive the
+      // degrees: exchange reuse does not match two instances of a pinned
+      // leaf); an edge survives when both its rows do. The endpoint rows
+      // stay in their edge's partition, so the regrouping by (lo, hi)
+      // reuses the pin's layout
+      val ends = cur.select(col("lo"), col("hi"),
+        explode(array(col("lo"), col("hi"))).as("n"))
+      val keep = ends.groupBy("n").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k)
+      ends.join(keep, Seq("n"), "left_semi")
+        .groupBy("lo", "hi").agg(count(lit(1)).as("ends"))
+        .filter(col("ends") === 2L).select(col("lo"), col("hi"))
+    } ((prev, row, _) => prev.fold(row.getLong(0) == 0L)(_ == row))
     e.select(col("lo").as("n")).union(e.select(col("hi").as("n")))
       .groupBy("n").agg(count(lit(1)).as("core_deg"))
       .select(col("n").as("node"), col("core_deg"))

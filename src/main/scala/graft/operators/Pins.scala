@@ -44,13 +44,19 @@ import org.apache.spark.sql.execution.LogicalRDD
   * call; the caller releases them by unpersisting the returned frame's
   * blocks or letting the session end).
   *
-  * Single-pin fixpoint loops (dedup clusters / connected components,
-  * the scc label fixpoints, condense's level relaxation) run on
-  * [[iterate]], which owns that release order, reads each round's
-  * convergence witness off the pin's own pass ([[pinObserved]]) and
-  * turns an exhausted round budget into a named error. A missing
-  * observed-metrics row is one named error too ([[observedRow]]):
-  * no caller keeps a second probe to fall back to. */
+  * Every convergence loop — dedup clusters / connected components,
+  * k-core peeling, BFS rings, the scc trim and label fixpoints,
+  * condense's level relaxation — runs on [[iterate]]: one pin per
+  * round, each round's convergence witness read off that pin's own pass
+  * ([[pinObserved]]), the superseded pin released once its successor
+  * has materialized, and an exhausted round budget turned into a named
+  * error. A missing observed-metrics row is one named error too
+  * ([[observedRow]]): no caller keeps a second probe to fall back to.
+  * Two kinds of loop stay outside it: the distributed scc outer loop,
+  * which takes several pins per round and reads its remaining-edge
+  * count off one of them, and the fixed-round loops (pageRank,
+  * labelPropagation, HITS), which have no convergence test and keep
+  * their own pin cadence. */
 object Pins {
   val ModeKey = "spark.graft.checkpointMode"
 
@@ -253,24 +259,28 @@ object Pins {
         s"observed metrics '$name' did not surface from its frame's " +
           s"execution (read at ${callSite()})"))
 
-  /** A single-pin fixpoint loop: pins `seed`, then `step(current)` once
-    * per round, each pin with the `witness` aggregates observed on its
-    * own pass ([[pinObserved]]), and releases the superseded pin only
-    * after its successor has materialized. Stops as soon as
-    * `converged(previous witness row, this pin's row)` holds — checked
-    * on the seed too, with no previous row — and returns the final pin
-    * (the caller owns it) with the number of rounds stepped. A loop
-    * still unconverged after `maxIter` rounds releases its last pin
-    * and throws an `IllegalArgumentException` naming `name` and
-    * `maxIter`: never a partial result. Observations are named
-    * `name/seed`, `name/1`, `name/2`, …; each pin is its own query, so
-    * the names never meet in one plan. */
-  def iterate(name: String, seed: DataFrame, maxIter: Int, witness: Column*)
+  /** A single-pin fixpoint loop. `start` is the seed pin with its
+    * `witness` row (from [[pinObserved]], or a pin the caller already
+    * holds with the row observed on its pass); the loop owns that pin
+    * from here on. Each round pins `step(current)` with the `witness`
+    * aggregates observed on its own pass and releases the superseded pin
+    * only after its successor has materialized. Stops as soon as
+    * `converged(previous witness row, this pin's row, round)` holds —
+    * checked on the seed too, as round 0 with no previous row — and
+    * returns the final pin (the caller owns it), its witness row and the
+    * number of rounds stepped. A loop still unconverged after `maxIter`
+    * rounds releases its last pin and throws an
+    * `IllegalArgumentException` naming `name` and `maxIter`: never a
+    * partial result. A bound that should end the loop silently belongs
+    * in `converged`, which sees the round number. Observations are named
+    * `name/1`, `name/2`, …; each pin is its own query, so the names
+    * never meet in one plan. */
+  def iterate(name: String, start: (DataFrame, Row), maxIter: Int, witness: Column*)
              (step: DataFrame => DataFrame)
-             (converged: (Option[Row], Row) => Boolean): (DataFrame, Int) = {
-    var (cur, row) = pinObserved(seed, s"$name/seed", witness: _*)
-    var done = converged(None, row)
+             (converged: (Option[Row], Row, Int) => Boolean): (DataFrame, Row, Int) = {
+    var (cur, row) = start
     var rounds = 0
+    var done = converged(None, row, rounds)
     while (!done) {
       if (rounds >= maxIter) {
         release(cur)
@@ -280,11 +290,11 @@ object Pins {
       rounds += 1
       val (next, nextRow) = pinObserved(step(cur), s"$name/$rounds", witness: _*)
       release(cur) // superseded: its successor has materialized
-      done = converged(Some(row), nextRow)
+      done = converged(Some(row), nextRow, rounds)
       cur = next
       row = nextRow
     }
-    (cur, rounds)
+    (cur, row, rounds)
   }
 
   /** Eager constant-depth lineage pin in the session-selected mode. */

@@ -65,11 +65,15 @@ import org.apache.spark.sql.functions._
   * streaming dedup; the invariant that matters is that NO two accepted
   * docs are near-dups at the banding's sensitivity.
   *
-  * Scale: each cycle's cost is the batch's (scoring, signing, one
-  * bucket-local index join, keyed writes into touched partitions) —
-  * never a re-scan of corpus text; the only archive-sized input is the
-  * band index, which joins bucket-locally and prunes to the batch's
-  * buckets.
+  * Scale: scoring, signing and the bucket-local index join cost the
+  * batch, but the commits cost the archive. [[Warehouse.mergeUpsert]]
+  * reads and rewrites every partition its update touches, and the
+  * corpus (by `lang`) and the index (by `band`) are partitioned so
+  * coarsely that every batch touches all of them: each cycle reads,
+  * pins and rewrites the whole corpus text and the whole band index,
+  * and the probe's bucket-cap aggregate groups the whole index
+  * (measured: a 200-doc increment wrote corpus + index in full at two
+  * archive sizes). Making a cycle cost the batch is ROADMAP item 9.
   */
 object CorpusPipeline {
 
@@ -221,12 +225,16 @@ object CorpusPipeline {
 
   /** `foreachBatch` body for CONTINUOUS corpus ingestion: each
     * micro-batch of landing docs runs one full [[runCycle]] against the
-    * persisted corpus + index. Safe under Structured Streaming's
-    * at-least-once foreachBatch contract for the same reason the batch
-    * cycle is scheduler-safe: a replayed micro-batch's accepted docs are
-    * skipped at extract, its rejected docs re-reach the same
-    * deterministic verdicts, and both commits are keyed upserts — so
-    * replays converge on identical corpus + index state. `onStats`
+    * persisted corpus + index, under Structured Streaming's
+    * at-least-once foreachBatch contract: a replayed micro-batch's
+    * accepted docs are skipped at extract, its rejected docs re-reach
+    * the same deterministic verdicts, and both commits are keyed
+    * upserts. A replay therefore converges on the state of a run that
+    * never failed when the cycle failed before or in the corpus commit,
+    * or after both commits; it does NOT repair an index commit that
+    * failed after the corpus commit landed — the replay skips those
+    * docs at extract, so their bands never reach the index (ROADMAP
+    * item 8). `onStats`
     * receives each cycle's accounting row (a production deployment
     * writes it to a metrics sink). */
   def foreachBatchSink(corpusPath: String, indexPath: String,

@@ -85,11 +85,15 @@ object Warehouse {
     * those periods are re-aggregated FROM RAW — complete recomputes,
     * so late-arriving rows inside an old period are folded in
     * correctly, not just appended — and (4) land via dynamic partition
-    * overwrite, replacing exactly the touched periods. Cost scales
-    * with the hot periods an increment lands in, never with table
-    * history; re-running with no new data is a no-op; re-running after
-    * a crash converges (idempotent), which is what lets an
-    * Airflow-style scheduler retry blindly.
+    * overwrite, replacing exactly the touched periods. The WRITE
+    * scales with the hot periods an increment lands in; the READS do
+    * not yet: the delta probe filters `raw` on the cursor alone, and
+    * the slice prunes `raw`'s files only when its period key is `raw`'s
+    * partition column — a weekly or monthly refresh over day-partitioned
+    * stage reads every stage file, so its cost grows with table history
+    * (ROADMAP item 6). Re-running with no new data is a no-op;
+    * re-running after a crash converges (idempotent), which is what
+    * lets an Airflow-style scheduler retry blindly.
     *
     * `raw` must already carry the partition columns (derive the period
     * key first) plus a monotone ingest cursor `rawWatermarkCol` (dlt's

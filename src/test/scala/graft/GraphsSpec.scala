@@ -243,6 +243,19 @@ class GraphsSpec extends SparkSpec {
     }
   }
 
+  test("kcore: a core settling in exactly maxIter peels is returned; one peel short throws") {
+    // the cascade needs two productive peels: maxIter = 2 returns the
+    // triangle, maxIter = 1 stops with node 4 still below k
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+      .toDF("s", "t")
+    val got = Graphs.kcore(edges, "s", "t", k = 2, maxIter = 2)
+      .as[(Long, Long)].collect().toMap
+    assert(got == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+    intercept[IllegalArgumentException] {
+      Graphs.kcore(edges, "s", "t", k = 2, maxIter = 1).collect()
+    }
+  }
+
   test("bfsDepth: exact hop rings on a path; multi-seed takes the nearer seed") {
     // path 1-2-3-4-5, seed {1}: depths 0..4
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("s", "t")
@@ -432,6 +445,71 @@ class GraphsSpec extends SparkSpec {
       Graphs.scc(edges, "s", "t", maxOuter = 1, localThreshold = 0L).collect()
     }
     assert(e.getMessage.contains("maxOuter"))
+  }
+
+  test("two-step loops name the maxIter the caller passed when they do not converge") {
+    // a 64-node directed cycle: forward coloring needs more than the
+    // four steps maxIter = 3 rounds up to
+    val cycle = (0L until 64L).map(i => (i, (i + 1) % 64)).toDF("s", "t")
+    val e1 = intercept[IllegalArgumentException] {
+      Graphs.scc(cycle, "s", "t", maxIter = 3, localThreshold = 0L).collect()
+    }
+    assert(e1.getMessage.contains("forward-color") &&
+      e1.getMessage.contains("maxIter = 3"), e1.getMessage)
+    // a 10-node path condenses to itself: trim settles the scc, and the
+    // level relaxation needs nine steps
+    val path = (1L until 10L).map(i => (i, i + 1)).toDF("s", "t")
+    val e2 = intercept[IllegalArgumentException] {
+      Graphs.condense(path, "s", "t", maxIter = 3, localThreshold = 0L).collect()
+    }
+    assert(e2.getMessage.contains("condense") &&
+      e2.getMessage.contains("maxIter = 3"), e2.getMessage)
+  }
+
+  test("kcore, bfsDepth, scc and condense start no job from Graphs itself") {
+    // every job these loops start runs through Pins (a pin and its
+    // observed witness) or from the caller's action on the returned
+    // frame: a job whose short call site names Graphs.scala is a
+    // standalone probe. Adaptive execution submits a query's jobs from
+    // its own pool threads, so such a job takes the short call site of
+    // the SQL execution it belongs to
+    val sc = spark.sparkContext
+    val jobSites = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[Long])]()
+    val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobSites.add((js.stageInfos.maxBy(_.stageId).name,
+          Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)))
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            execSites.put(x.executionId, x.description)
+          case _ =>
+        }
+    }
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)).toDF("s", "t")
+    val dir = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (5L, 6L), (6L, 7L), (7L, 5L)).toDF("s", "t")
+    sc.addSparkListener(listener)
+    try {
+      Graphs.kcore(und, "s", "t", k = 2).collect()
+      Graphs.bfsDepth(und, "s", "t", Seq(1L).toDF("n")).collect()
+      for (threshold <- Seq(100000L, 0L)) {
+        Graphs.scc(dir, "s", "t", localThreshold = threshold).collect()
+        Graphs.condense(dir, "s", "t", localThreshold = threshold).collect()
+      }
+      org.apache.spark.graft.ListenerBridge.waitUntilListenersProcessed(sc)
+    } finally sc.removeSparkListener(listener)
+    val sites = scala.jdk.CollectionConverters.CollectionHasAsScala(jobSites).asScala.toSeq
+      .map { case (own, exec) =>
+        if (own.contains(".scala:")) own
+        else exec.flatMap(id => Option(execSites.get(id))).getOrElse(own)
+      }
+    assert(sites.exists(_.contains("Pins.scala")), sites)
+    val probes = sites.filter(_.contains("Graphs.scala"))
+    assert(probes.isEmpty, s"jobs started from Graphs.scala: ${probes.mkString(", ")}")
   }
 
   test("scc: adversarial shapes (r14 verdict) — increasing-id SCC chain and a long path " +

@@ -72,6 +72,47 @@ class PinsSpec extends SparkSpec {
     assert((pinnedIds intersect (bNew ++ kNew ++ lNew)).isEmpty)
   }
 
+  /** The pins `op` takes (local-mode checkpoints, counted by a query
+    * listener) and the rounds its `name` loop steps (the observations
+    * [[Pins.iterate]] names `name/1`, `name/2`, … on those pins). */
+  private def pinsAndRounds(name: String)(op: => DataFrame): (Int, Int) = {
+    val pins = new java.util.concurrent.atomic.AtomicInteger(0)
+    val rounds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val round = (java.util.regex.Pattern.quote(name) + ".*/\\d+").r
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") {
+          pins.incrementAndGet()
+          if (qe.observedMetrics.keys.exists(round.matches(_))) rounds.incrementAndGet()
+        }
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Pins.release(op)
+      org.apache.spark.graft.ListenerBridge.waitUntilListenersProcessed(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    (pins.get(), rounds.get())
+  }
+
+  test("kcore and bfsDepth take one pin per round") {
+    // the cascade graph peels twice and confirms in a third round; its
+    // one setup pin is the canonical edge list (one layout partition)
+    val cascade = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)).toDF("s", "t")
+    val (kPins, kRounds) = pinsAndRounds("k-core")(Graphs.kcore(cascade, "s", "t", k = 2))
+    assert(kRounds == 3 && kPins == 1 + kRounds, s"kcore: $kPins pins, $kRounds rounds")
+    // the path settles one ring per round and ends on the empty fifth;
+    // setup pins the edge list and the seed ring
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("s", "t")
+    val (bPins, bRounds) = pinsAndRounds("bfsDepth")(
+      Graphs.bfsDepth(path, "s", "t", Seq(1L).toDF("n"), maxDepth = 6))
+    assert(bRounds == 5 && bPins == 2 + bRounds, s"bfsDepth: $bPins pins, $bRounds rounds")
+  }
+
   test("scc retains only its result-backing pins on both physical paths") {
     val directed = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 3L))
       .toDF("s", "t")
@@ -369,10 +410,13 @@ class PinsSpec extends SparkSpec {
     * the witness counts the rows still positive. */
   private def countdown(maxIter: Int, from: Long): (DataFrame, Int) = {
     import org.apache.spark.sql.functions.{count, greatest, lit, when}
-    Pins.iterate("countdown", spark.range(0, 5).selectExpr(s"least(id, $from) as v").toDF(),
-        maxIter, count(when(col("v") > 0, lit(1))).as("n_pos"))(
+    val nPos = count(when(col("v") > 0, lit(1))).as("n_pos")
+    val seed = spark.range(0, 5).selectExpr(s"least(id, $from) as v").toDF()
+    val (out, _, rounds) = Pins.iterate("countdown",
+        Pins.pinObserved(seed, "countdown/seed", nPos), maxIter, nPos)(
       cur => cur.select(greatest(col("v") - 1, lit(0L)).as("v")))(
-      (_, row) => row.getLong(0) == 0L)
+      (_, row, _) => row.getLong(0) == 0L)
+    (out, rounds)
   }
 
   test("iterate: a seed that has already converged takes 0 rounds and is the result") {
@@ -409,15 +453,18 @@ class PinsSpec extends SparkSpec {
   test("iterate: the convergence rule sees the previous witness row (None on the seed)") {
     import org.apache.spark.sql.functions.{lit, sum}
     // a witness that freezes: sum(v) stops moving once every v is 0
-    val seen = scala.collection.mutable.ArrayBuffer[Option[Long]]()
-    val (out, rounds) = Pins.iterate("frozen-sum",
-        spark.range(0, 3).selectExpr("id as v").toDF(), 10,
-        sum(col("v")).as("s"))(
+    val seen = scala.collection.mutable.ArrayBuffer[(Option[Long], Int)]()
+    val s = sum(col("v")).as("s")
+    val (out, last, rounds) = Pins.iterate("frozen-sum",
+        Pins.pinObserved(spark.range(0, 3).selectExpr("id as v").toDF(), "frozen-sum/seed", s),
+        10, s)(
       cur => cur.selectExpr("greatest(v - 1, 0) as v"))(
-      (prev, row) => { seen += prev.map(_.getLong(0)); prev.contains(row) })
-    // sums 3, 1, 0, 0: frozen on the third round
+      (prev, row, round) => { seen += (prev.map(_.getLong(0)) -> round); prev.contains(row) })
+    // sums 3, 1, 0, 0: frozen on the third round; the seed is round 0
     assert(rounds == 3, s"rounds: $rounds")
-    assert(seen.toSeq == Seq(None, Some(3L), Some(1L), Some(0L)), s"seen: $seen")
+    assert(seen.toSeq == Seq(None -> 0, Some(3L) -> 1, Some(1L) -> 2, Some(0L) -> 3),
+      s"seen: $seen")
+    assert(last.getLong(0) == 0L, s"last witness row: $last")
     Pins.release(out)
   }
 
