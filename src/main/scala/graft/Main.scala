@@ -1,30 +1,23 @@
 package graft
 
 import graft.pipelines.{CorpusPipeline, IotBatchPipeline}
-import org.apache.spark.sql.SparkSession
 
 /** One-command tour of the two master DAGs: a full IoT warehouse cycle
   * (extract → stage → daily/weekly/monthly agg cadences — the
   * reference's `iot_master_dag.py` shape) and a training-corpus
-  * construction cycle (curate → exact/near dedup vs archive → keyed
-  * commit), both against a temp warehouse over the sf0.001 testdata.
+  * construction cycle (curate → exact/near dedup vs archive → append
+  * commit), both against a temp warehouse over the sf0.001 testdata, in
+  * a [[GraftSession]].
   *
   * `sbt run` (default main) or `sbt "runMain graft.Main [sfDir]"` —
   * prints each cycle's stats and exits 0. Both cycles are blindly
-  * re-runnable (idempotent keyed writes); running Main twice converges.
+  * re-runnable (idempotent writes); running Main twice converges.
   */
 object Main {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rewriteTopK", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val wh = java.nio.file.Files.createTempDirectory("graft-demo").toString
     println(s"[demo] input=$sfDir warehouse=$wh")

@@ -320,17 +320,16 @@ object Pins {
   }
 
   /** The MEASURED byte size of an eagerly-pinned frame's storage
-    * blocks (mem + disk), straight from the block manager — the truth
-    * the planner should size broadcast/hash-join decisions with,
-    * instead of the origin plan's multiplied estimate. None for
-    * reliable-mode pins (file-backed, not persisted) and anything not
-    * found in the storage registry. */
+    * blocks (mem + disk), straight from the block-manager master, which
+    * is complete once the pin's job has returned — the truth the planner
+    * should size broadcast/hash-join decisions with, instead of the
+    * origin plan's multiplied estimate. None for reliable-mode pins
+    * (file-backed, not persisted) and anything that stored no bytes. */
   private def measuredSize(pinned: DataFrame): Option[BigInt] =
     pinned.queryExecution.analyzed match {
       case lr: LogicalRDD =>
-        pinned.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == lr.rdd.id)
-          .map(i => BigInt(i.memSize + i.diskSize)).filter(_ > 0)
+        Some(BigInt(org.apache.spark.graft.BlockBridge.rddBytes(
+          pinned.sparkSession.sparkContext, lr.rdd.id))).filter(_ > 0)
       case _ => None
     }
 

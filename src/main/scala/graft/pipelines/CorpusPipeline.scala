@@ -2,7 +2,6 @@ package graft.pipelines
 
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Pins}
-import graft.sources.Warehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +23,8 @@ import org.apache.spark.sql.functions._
   *  3. EXACT DEDUP: batch docs whose `md5(text)` already exists in the
   *     corpus are dropped — the corpus STORES `text_hash` at commit, so
   *     this gate reads one pruned column of the archive, never its
-  *     text; within the batch the lowest id per hash wins.
+  *     text; within the batch the lowest id per hash wins, and a
+  *     `doc_id` landing twice in one batch keeps one row.
   *  4. NEAR-DUP vs ARCHIVE: the batch is signed+banded ONCE (the probe,
   *     the within-batch pair run and the index commit all consume that
   *     one pass) and probed ONCE against the PERSISTED band index
@@ -36,12 +36,17 @@ import org.apache.spark.sql.functions._
   *  5. NEAR-DUP within batch: [[Dedup.minhashPairsFromBands]] over the
   *     surviving bands → [[Dedup.clusters]] → keep each cluster's
   *     canonical keeper ([[Dedup.applyClusters]]).
-  *  6. COMMIT: survivors merge-upsert into the lang-partitioned corpus;
-  *     their band rows merge-upsert into the band-partitioned index —
-  *     both keyed writes, so replays are absorbed, and the maintained
-  *     index provably equals a from-scratch index of the corpus
-  *     (spec-asserted). The index commit follows a corpus commit that
-  *     succeeded, so the index never holds a doc the corpus lacks.
+  *  6. COMMIT: survivors are APPENDED to the lang-partitioned corpus,
+  *     then their band rows to the band-partitioned index. They are new
+  *     by construction (step 1 drops every stored `doc_id`, step 3
+  *     keeps one row per `doc_id`), so a commit reads no stored row and
+  *     rewrites no file; replays are absorbed by step 1's seen filter,
+  *     and the maintained index provably equals a from-scratch index of
+  *     the corpus (spec-asserted). Before either append, each batch is
+  *     analysed as a union with the table the cycle opened at its start
+  *     (no job), so schema drift fails the cycle before it writes. The
+  *     index commit follows a corpus commit that succeeded, so the index
+  *     never holds a doc the corpus lacks.
   *
   * Accounting rides the pins: the landing, new and curated counts are
   * `Dataset.observe` metrics of the extract pin, the exact-dedup
@@ -49,9 +54,8 @@ import org.apache.spark.sql.functions._
   * none of them runs an execution of its own; the corpus size is the
   * one figure read back, from the committed table. A metric that fails
   * to surface throws, naming the metric and the line that read it
-  * ([[Pins.observedRow]]). Every pin the
-  * cycle takes (the extract, exact-dedup, band, archive-probe,
-  * cluster-label and accepted pins, and the write paths' own) is
+  * ([[Pins.observedRow]]). Every pin the cycle takes (the extract,
+  * exact-dedup, band, archive-probe, cluster-label and accepted pins) is
   * released once its last consumer has materialized, so a long
   * `ingestStream` session holds no blocks between micro-batches.
   *
@@ -65,15 +69,19 @@ import org.apache.spark.sql.functions._
   * streaming dedup; the invariant that matters is that NO two accepted
   * docs are near-dups at the banding's sensitivity.
   *
-  * Scale: scoring, signing and the bucket-local index join cost the
-  * batch, but the commits cost the archive. [[Warehouse.mergeUpsert]]
-  * reads and rewrites every partition its update touches, and the
-  * corpus (by `lang`) and the index (by `band`) are partitioned so
-  * coarsely that every batch touches all of them: each cycle reads,
-  * pins and rewrites the whole corpus text and the whole band index,
-  * and the probe's bucket-cap aggregate groups the whole index
-  * (measured: a 200-doc increment wrote corpus + index in full at two
-  * archive sizes). Making a cycle cost the batch is ROADMAP item 9.
+  * Scale: scoring, signing and both commits cost the batch
+  * (`CorpusPipelineSpec`: one 100-doc increment wrote 12,380 B after a
+  * 19-doc archive and 12,054 B after a 101-doc one). What still reads
+  * the archive, each cycle:
+  *  - the extract's seen filter, the corpus's `doc_id` column;
+  *  - the exact gate, the corpus's `text_hash` column;
+  *  - the archive probe, the whole band index: its bucket-cap aggregate
+  *    groups every index row before the probe join (ROADMAP item 9);
+  *  - the corpus size in [[CycleStats]], a row count of the corpus.
+  * Each commit adds a file per touched partition and write task, so the
+  * file count grows with the cycles; [[graft.sources.Warehouse.compactPartitions]]
+  * is the periodic step that folds them (not a per-cycle one: with its
+  * `minFiles = 2` it would rewrite every partition each cycle).
   */
 object CorpusPipeline {
 
@@ -81,21 +89,22 @@ object CorpusPipeline {
                         nRejectedExact: Long, nRejectedNearDup: Long,
                         nAccepted: Long, corpusSize: Long)
 
-  private def exists(spark: SparkSession, path: String): Boolean =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(path))
+  /** The table at `path`, if one has been committed there. */
+  private def stored(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(spark.read.parquet(path))
+    else None
+  }
 
   /** The accepted corpus (empty frame with the landing's schema before
     * the first commit). Landing schema: `doc_id, text, lang, source`. */
   def corpus(spark: SparkSession, corpusPath: String,
              landing: DataFrame): DataFrame =
-    if (exists(spark, corpusPath)) spark.read.parquet(corpusPath)
-    else landing.limit(0)
+    stored(spark, corpusPath).getOrElse(landing.limit(0))
 
   def bandIndex(spark: SparkSession, indexPath: String): DataFrame =
-    if (exists(spark, indexPath)) spark.read.parquet(indexPath)
-    else {
+    stored(spark, indexPath).getOrElse {
       import spark.implicits._
       spark.emptyDataset[(Long, Int, String)].toDF("doc", "band", "bucket")
     }
@@ -112,7 +121,8 @@ object CorpusPipeline {
                minQuality: Double = 0.5, minBands: Int = 2,
                maxBucket: Int = 1000): CycleStats = {
     val spark = landing.sparkSession
-    val corp = corpus(spark, corpusPath, landing)
+    val storedCorpus = stored(spark, corpusPath)
+    val corp = storedCorpus.getOrElse(landing.limit(0))
     val idx = bandIndex(spark, indexPath)
 
     // 1. extract + 2. curate, in ONE pinned pass: landing docs already
@@ -151,20 +161,26 @@ object CorpusPipeline {
 
     // 3. exact dedup: the corpus stores `text_hash` at commit time, so
     // this gate reads ONE pruned column of the archive — never its text
-    // (first cycle: no corpus yet, the hash frame is empty either way)
+    // (first cycle: no corpus yet, the hash frame is empty either way).
+    // Within the batch the lowest id per hash wins, then one row per
+    // `doc_id` (the lowest hash) survives, so a doc landing twice in one
+    // batch with different texts commits one row; the second counts as
+    // an exact duplicate
     val corpHashes =
       if (corp.columns.contains("text_hash"))
         corp.select(col("text_hash").as("__h")).distinct()
       else corp.select(md5(col("text")).as("__h")).distinct()
     val hashed = fresh.filter(col("__curated")).drop("__curated")
       .withColumn("__h", md5(col("text")))
-    val wHash = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__h")).orderBy(col("doc_id"))
+    def first(by: String, order: String)(df: DataFrame): DataFrame = df
+      .withColumn("__rn", row_number().over(org.apache.spark.sql.expressions
+        .Window.partitionBy(col(by)).orderBy(col(order))))
+      .filter(col("__rn") === 1).drop("__rn")
     // pinned: the banding pass and the accepted pin both read it
     val (noExact, uniqueRow) = Pins.pinObserved(hashed
       .join(corpHashes, Seq("__h"), "left_anti")
-      .withColumn("__rn", row_number().over(wHash))
-      .filter(col("__rn") === 1).drop("__rn")
+      .transform(first("__h", "doc_id"))
+      .transform(first("doc_id", "__h"))
       .withColumnRenamed("__h", "text_hash"),
       "corpus_no_exact", count(lit(1)).as("n"))
     Pins.release(fresh)
@@ -201,21 +217,25 @@ object CorpusPipeline {
     val nAccepted = acceptedRow.getAs[Long]("n")
     val nNearDupRejected = nNew - nQualityRejected - nExactRejected - nAccepted
 
-    // 6. commit: keyed writes absorb replays; the index rows are the
-    // accepted docs' slice of the ONE banding pass. The index commit
-    // FOLLOWS a corpus commit that succeeded, never runs beside it: an
-    // index that holds docs the corpus lacks would make a replay probe
-    // each such doc against its own bands and reject it as a near-dup
-    // of itself, so it would never enter the corpus.
+    // 6. commit: accepted docs are new by construction (the extract
+    // dropped every stored `doc_id`, step 3 left one row per `doc_id`),
+    // so both commits APPEND — no read of the stored corpus or index.
+    // Drift is loud: each append is first analysed against the table
+    // the cycle opened at its start (a union, which starts no job), so a
+    // batch that cannot join the stored schema throws before either
+    // write. The index rows are the accepted docs' slice of the ONE
+    // banding pass. The index commit FOLLOWS a corpus commit that
+    // succeeded, never runs beside it: an index that holds docs the
+    // corpus lacks would make a replay probe each such doc against its
+    // own bands and reject it as a near-dup of itself, so it would never
+    // enter the corpus.
     if (nAccepted > 0) {
-      Warehouse.mergeUpsert(accepted, corpusPath,
-        partitionCols = Seq("lang"), key = Seq("doc_id"),
-        versionCol = "doc_id")
-      Warehouse.mergeUpsert(
-        keptBands.join(accepted.select(col("doc_id").as("doc")),
-          Seq("doc"), "left_semi"),
-        indexPath, partitionCols = Seq("band"),
-        key = Seq("doc", "band"), versionCol = "doc")
+      val acceptedBands = keptBands
+        .join(accepted.select(col("doc_id").as("doc")), Seq("doc"), "left_semi")
+      storedCorpus.foreach(_.unionByName(accepted))
+      idx.unionByName(acceptedBands)
+      accepted.write.mode("append").partitionBy("lang").parquet(corpusPath)
+      acceptedBands.write.mode("append").partitionBy("band").parquet(indexPath)
     }
     Pins.release(accepted, batchBands, archiveDups)
     val corpusSize = corpus(spark, corpusPath, landing).count()
@@ -227,14 +247,14 @@ object CorpusPipeline {
     * micro-batch of landing docs runs one full [[runCycle]] against the
     * persisted corpus + index, under Structured Streaming's
     * at-least-once foreachBatch contract: a replayed micro-batch's
-    * accepted docs are skipped at extract, its rejected docs re-reach
-    * the same deterministic verdicts, and both commits are keyed
-    * upserts. A replay therefore converges on the state of a run that
+    * accepted docs are skipped at extract and its rejected docs re-reach
+    * the same deterministic verdicts, so the appends never commit a doc
+    * twice. A replay therefore converges on the state of a run that
     * never failed when the cycle failed before or in the corpus commit,
-    * or after both commits; it does NOT repair an index commit that
-    * failed after the corpus commit landed — the replay skips those
-    * docs at extract, so their bands never reach the index (ROADMAP
-    * item 8). `onStats`
+    * or after both commits (before its stats reached `onStats`); it
+    * does NOT repair an index commit that failed after the corpus
+    * commit landed — the replay skips those docs at extract, so their
+    * bands never reach the index (ROADMAP item 8). `onStats`
     * receives each cycle's accounting row (a production deployment
     * writes it to a metrics sink). */
   def foreachBatchSink(corpusPath: String, indexPath: String,

@@ -188,4 +188,144 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(sameRows(table(corpusPath), table(s"$dir/ref_corpus")))
     assert(sameRows(table(indexPath), table(s"$dir/ref_index")))
   }
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+    a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
+
+  /** No `doc_id` twice in the corpus, no `(doc, band)` twice in the index. */
+  private def noDuplicateKeys(corpusPath: String, indexPath: String): Boolean =
+    spark.read.parquet(corpusPath).groupBy("doc_id").count()
+      .filter($"count" > 1).isEmpty &&
+      spark.read.parquet(indexPath).groupBy("doc", "band").count()
+        .filter($"count" > 1).isEmpty
+
+  test("a cycle's commits write the increment's bytes, whatever the archive size") {
+    // the same 100-doc increment after archives of two sizes: the bytes
+    // the cycle writes (every task's output metrics) must not grow with
+    // the archive, as a commit that rewrites the stored corpus and index
+    // would make them
+    val sc = spark.sparkContext
+    val docs = landing()
+    val increment = docs.filter($"doc_id" >= 400L)
+    def written(archiveCut: Long): (Long, CorpusPipeline.CycleStats) = {
+      val dir = Files.createTempDirectory("graft-corpus-bytes").toString
+      CorpusPipeline.runCycle(docs.filter($"doc_id" < archiveCut),
+        s"$dir/corpus", s"$dir/index")
+      val bytes = new java.util.concurrent.atomic.AtomicLong
+      val counter = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null)
+            bytes.addAndGet(e.taskMetrics.outputMetrics.bytesWritten)
+      }
+      org.apache.spark.graft.ListenerBridge.waitUntilListenersProcessed(sc)
+      sc.addSparkListener(counter)
+      val st =
+        try CorpusPipeline.runCycle(increment, s"$dir/corpus", s"$dir/index")
+        finally {
+          org.apache.spark.graft.ListenerBridge.waitUntilListenersProcessed(sc)
+          sc.removeSparkListener(counter)
+        }
+      (bytes.get, st)
+    }
+    val (small, atSmall) = written(100L)
+    val (large, atLarge) = written(400L)
+    assert(atLarge.corpusSize - atLarge.nAccepted >=
+      3 * (atSmall.corpusSize - atSmall.nAccepted))
+    assert(atSmall.nAccepted > 0 && atLarge.nAccepted > 0)
+    assert(math.abs(large - small) <= 0.1 * small,
+      s"increment wrote $small B after the small archive ($atSmall), " +
+        s"$large B after the large one ($atLarge)")
+  }
+
+  test("a corpus cycle of the same shape as the cycle before it compiles almost no code") {
+    // a long-lived session runs the same plans every cycle; once the
+    // generated-code cache holds a cycle, the next one reuses its classes
+    val dir = Files.createTempDirectory("graft-corpus-codegen").toString
+    val docs = landing()
+    val batches = Seq(0L, 150L, 300L, 450L).sliding(2).zipWithIndex.map {
+      case (Seq(lo, hi), i) =>
+        docs.filter($"doc_id" >= lo && $"doc_id" < hi).coalesce(1)
+          .write.parquet(s"$dir/landing/$i")
+        spark.read.parquet(s"$dir/landing/$i")
+    }.toList
+    def cycle(batch: org.apache.spark.sql.DataFrame) =
+      CorpusPipeline.runCycle(batch, s"$dir/corpus", s"$dir/index")
+    cycle(batches(0)) // creates the corpus: a shape of its own
+    cycle(batches(1))
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    assert(cycle(batches(2)).nAccepted > 0)
+    val compiled = compiles.getCount - before
+    assert(compiled <= CompileBudget, s"the repeated cycle compiled $compiled classes")
+  }
+
+  /** Classes a repeated corpus cycle may compile: measured 12 with append
+    * commits and the graft session's code cache, 145 and 151 with merge
+    * commits and Spark's default cache. */
+  private val CompileBudget = 30
+
+  test("a cycle stopped after both commits, before its stats, replays to the state of a run that never failed") {
+    val dir = Files.createTempDirectory("graft-corpus-stopped").toString
+    val in = s"$dir/landing"
+    val docs = landing()
+    val first = docs.filter($"doc_id" < 250L)
+    val second = docs.filter($"doc_id" >= 250L)
+    // reference: the same two batches, no failure
+    CorpusPipeline.runCycle(first, s"$dir/ref_corpus", s"$dir/ref_index")
+    CorpusPipeline.runCycle(second, s"$dir/ref_corpus", s"$dir/ref_index")
+
+    // the second micro-batch commits both tables, then fails delivering
+    // its stats; the restarted query replays it from the checkpoint
+    var stopped = false
+    val onStats = (batchId: Long, _: CorpusPipeline.CycleStats) =>
+      if (batchId == 1 && !stopped) {
+        stopped = true
+        throw new IllegalStateException("stopped before the stats")
+      }
+    def query() = CorpusPipeline.ingestStream(
+      spark.readStream.schema(docs.schema).parquet(in),
+      s"$dir/corpus", s"$dir/index", s"$dir/ckpt", onStats = onStats).start()
+    first.coalesce(1).write.parquet(in)
+    val q = query()
+    try {
+      q.processAllAvailable()
+      second.coalesce(1).write.mode("append").parquet(in)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+    } finally q.stop()
+    assert(stopped)
+    val q2 = query()
+    try q2.processAllAvailable() finally q2.stop()
+
+    assert(sameRows(spark.read.parquet(s"$dir/corpus"),
+      spark.read.parquet(s"$dir/ref_corpus")))
+    assert(sameRows(spark.read.parquet(s"$dir/index"),
+      spark.read.parquet(s"$dir/ref_index")))
+    assert(noDuplicateKeys(s"$dir/corpus", s"$dir/index"))
+  }
+
+  test("a doc_id landing twice in one batch, with the same and with a different text, commits one corpus row") {
+    val dir = Files.createTempDirectory("graft-corpus-twice").toString
+    val docs = landing()
+    // two docs a cycle accepts: x from the batch, z from outside it
+    CorpusPipeline.runCycle(docs.filter($"doc_id" < 120L),
+      s"$dir/probe_corpus", s"$dir/probe_index")
+    val probe = spark.read.parquet(s"$dir/probe_corpus")
+    val x = probe.filter($"doc_id" < 60L).agg(min($"doc_id")).head().getLong(0)
+    val z = probe.filter($"doc_id" >= 60L).agg(min($"doc_id")).head().getLong(0)
+    val base = docs.filter($"doc_id" < 60L)
+    val batch = base
+      .unionByName(base.filter($"doc_id" === x))
+      .unionByName(docs.filter($"doc_id" === z).withColumn("doc_id", lit(x)))
+    val st = unpinned(CorpusPipeline.runCycle(batch, s"$dir/corpus", s"$dir/index"))
+    val corp = spark.read.parquet(s"$dir/corpus")
+    assert(corp.filter($"doc_id" === x).count() == 1)
+    assert(st.nLanding == 62 && st.nNew == st.nRejectedQuality +
+      st.nRejectedExact + st.nRejectedNearDup + st.nAccepted)
+    assert(corp.count() == st.corpusSize && st.corpusSize == st.nAccepted)
+    assert(noDuplicateKeys(s"$dir/corpus", s"$dir/index"))
+    // the index holds the bands of the text the corpus kept
+    assert(sameRows(spark.read.parquet(s"$dir/index").select("doc", "band", "bucket"),
+      Dedup.minhashBandIndex(corp, "doc_id", "text", 3, 16, 4)))
+  }
 }

@@ -198,6 +198,32 @@ class PinsSpec extends SparkSpec {
     Pins.release(a)
   }
 
+  test("a pin is measured from its stored blocks while the app-status queue is held") {
+    // the status store behind getRDDStorageInfo is filled by the listener
+    // bus, asynchronously; a listener that blocks the app-status queue
+    // keeps every block update of the pin below out of it, as a loaded
+    // host does. The pin's size must still be the bytes it stored
+    val sc = spark.sparkContext
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val holder = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        gate.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    org.apache.spark.graft.StatusQueue.add(sc, holder)
+    val pinned =
+      try Pins.pin(spark.range(0, 20000).selectExpr("id", "cast(id % 97 as string) as k"))
+      finally { gate.countDown(); sc.removeSparkListener(holder) }
+    val size = pinned.queryExecution.analyzed.stats.sizeInBytes
+    val rddId = pinned.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    org.apache.spark.graft.ListenerBridge.waitUntilListenersProcessed(sc)
+    val stored = sc.getRDDStorageInfo.find(_.id == rddId)
+      .map(i => BigInt(i.memSize + i.diskSize))
+    Pins.release(pinned)
+    assert(stored.exists(_ > 0) && stored.contains(size),
+      s"pin size $size, stored blocks $stored")
+  }
+
   test("pins debug guard: a pin over a RELEASED pin fails immediately with a named error") {
     // the r14-advice seam: without the guard, a misplaced release on a
     // localCheckpoint leaf (no lineage to recompute from) surfaces as a

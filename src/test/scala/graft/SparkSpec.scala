@@ -16,6 +16,10 @@ object TestSession {
       // executedPlan.toString; the 100-char metadata default truncates
       // longer filter lists mid-name
       .config("spark.sql.maxMetadataStringLength", "2000")
+      // the generated-code cache graft sessions run with; static, so this
+      // first session of the test JVM fixes it for every suite
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries.toString)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()
