@@ -44,29 +44,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // run with the full graft surface: SQL functions, the TopKPerKey
-      // strategy, and the row_number->TopKPerKey optimizer rule — every
-      // window-filter query then exercises the custom operator UNDER
-      // the correctness gate
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rewriteTopK", "true")
-      // the app/SQL status stores are live even with the UI disabled
-      // (they feed the REST/history surface) and default to retaining
-      // 1000 executions / 100k tasks of metrics — across a ~1100-
-      // execution suite that is real driver-heap ballast on the 8g
-      // fork; a bench keeps only a handful for post-mortem
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // Per query: one UNTIMED warm-up (codegen/file-index caches — the
     // steady state a long-lived cluster sees) then `runs` timed runs;
     // the reported number is the MEDIAN, with min and spread emitted

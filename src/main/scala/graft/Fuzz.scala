@@ -1779,16 +1779,7 @@ object Fuzz {
     val seed = sys.env.getOrElse("SPARK_GRAFT_FUZZ_SEED", "20260815").toLong
     val draws = sys.env.get("SPARK_GRAFT_FUZZ_DRAWS").map(_.toInt)
       .getOrElse(2 * (families.size + dataFamilies.size))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rewriteTopK", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
 
     val rng = new Random(seed)

@@ -16,9 +16,7 @@ import graft.pipelines.{CorpusPipeline, IotBatchPipeline}
 object Main {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.local(cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val wh = java.nio.file.Files.createTempDirectory("graft-demo").toString
     println(s"[demo] input=$sfDir warehouse=$wh")
 

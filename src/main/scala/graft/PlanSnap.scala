@@ -118,21 +118,4 @@ object PlanSnap {
           .map(x => x.group(1) -> x.group(2).toInt).toMap
     }.toMap
   }
-
-  /** Manual runner: `sbt "runMain graft.PlanSnap SF_DIR OUT.json"` —
-    * informational only; the canonical snapshot is written by
-    * PlanSnapshotSpec (same session config as the comparison). */
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outPath) = args
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fps = snapQueries.map(q => q -> fingerprintOf(spark, q, sfDir))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), toJson(fps))
-    println(s"""{"metric":"plansnap","queries":${fps.size},"out":"$outPath"}""")
-    spark.stop()
-  }
 }

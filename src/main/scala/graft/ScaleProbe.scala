@@ -2,7 +2,7 @@ package graft
 
 import graft.operators._
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Data-volume scaling probe — answers the question a fixed-SF bench
@@ -91,20 +91,14 @@ object ScaleProbe {
     // and the probe would measure the adversarial duplicate blow-up
     // the transforms exist to prevent — refuse rather than mislead
     require(mult >= 1 && mult <= 312, s"mult must be in [1, 312], got $mult")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.local(GraftSession.cpus)
     // default = cpus (the bench profile); override to separate
     // "operator scales worse than linearly" from "a fixed partition
     // count made per-partition sorts spill at high mult" — a real
-    // cluster's AQE grows partition counts with the data
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // cluster's AQE grows partition counts with the data. The committed
+    // 64x artifact was taken at 256 partitions.
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
 
     // localCheckpoint the inflated inputs so the probe times the
     // OPERATOR, not the inflation projection re-run per query

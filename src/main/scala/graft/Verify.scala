@@ -1,25 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // run with the full graft surface: SQL functions, the TopKPerKey
-      // strategy, and the row_number->TopKPerKey optimizer rule — every
-      // window-filter query then exercises the custom operator UNDER
-      // the correctness gate
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rewriteTopK", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the full graft surface: SQL functions, the TopKPerKey strategy and
+    // the row_number->TopKPerKey rewrite — every window-filter query then
+    // exercises the custom operator UNDER the correctness gate
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the dump (local iteration only;
     // the driver runs unfiltered)

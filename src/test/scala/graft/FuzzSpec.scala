@@ -93,4 +93,21 @@ class FuzzSpec extends AnyFunSuite {
     assert(all(42L) == all(42L))
     assert(all(42L) != all(43L))
   }
+
+  test("only GraftSession builds a session: the gates run the session users get") {
+    // Verify and Fuzz are the oracle gates; a main that spells its own
+    // SparkSession.builder() chain drifts from the preset (a missing
+    // code-cache size, rewrite or extension) and the gate then tests a
+    // session no user runs
+    val call = """SparkSession\s*\.\s*builder\s*\(""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val callers = try scala.jdk.CollectionConverters.IteratorHasAsScala(
+        files.iterator()).asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => call.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
+      .map(_.getFileName.toString).toSet
+    finally files.close()
+    assert(callers == Set("GraftSession.scala"),
+      s"SparkSession.builder() called outside GraftSession: ${callers - "GraftSession.scala"}")
+  }
 }
